@@ -1,21 +1,21 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Add, Cast, Divide,
-  EqualTo, Expression, If, IntegralDivide, Literal, Multiply, Pmod,
-  Subtract, UnaryMinus, UnscaledValue}
-import org.apache.spark.sql.graftbridge.ColumnBridge
+  EqualTo, Expression, If, IntegralDivide, KnownNotNull, Literal, Multiply,
+  Pmod, Subtract, UnaryMinus, UnscaledValue}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{Decimal, DecimalType, DoubleType,
   LongType}
 
-/** Divergence-free DECIMAL→DOUBLE emission: rewrite every
-  * Cast(DecimalType → DoubleType) in a query's final plan into the
-  * EXACT conversion sequence DuckDB executes, so the two engines agree
-  * at ANY magnitude — the structural close of the round-14 verdict's
-  * item 6 (the round-15 decimal FenceProbe sweep found 79 graded keys
-  * whose >2^53 decimal emissions sat in the latent 1-ulp divergence
-  * window; this rewrite retires the whole class instead of 79 hand
-  * restructures).
+/** Divergence-free DECIMAL→DOUBLE emission: an optimizer rule replaces
+  * every Cast(DecimalType → DoubleType) with the EXACT conversion
+  * sequence DuckDB executes, so the two engines agree at ANY magnitude
+  * — the structural close of the round-14 verdict's item 6 (the
+  * round-15 decimal FenceProbe sweep found 79 graded keys whose >2^53
+  * decimal emissions sat in the latent 1-ulp divergence window; the
+  * twin retires the whole class instead of 79 hand restructures).
   *
   * DuckDB's conversion, reverse-engineered and validated against
   * duckdb 1.x on 240k+ random values (hugeint both signs; DECIMAL(38,s)
@@ -40,24 +40,27 @@ import org.apache.spark.sql.types.{Decimal, DecimalType, DoubleType,
   * still passes, and a value where native ≠ oracle (the latent 1-ulp
   * window) now agrees instead of diverging.
   *
-  * Scope: applied by SparkEntry to every graded query's final frame
-  * (Verify/Bench/specs/probes all read the wrapped map), AND at both
-  * in-query materialization boundaries a final-plan rewrite cannot
-  * see (round-15 ADVICE, medium): driver-loop / shared-subtree
-  * `localCheckpoint` cuts go through the operators package's
-  * `duckCkpt()` (rewrite-then-checkpoint), and every streaming key's
-  * pipeline is rewritten by StreamOps' runToMemory* runners BEFORE
-  * writeStream materializes it. The residual uncovered surface is a
-  * checkpoint outside graft.operators (none in the graded set —
-  * `localCheckpoint` greps to zero outside duckCkpt itself) — so a
-  * decimal emission inside a materialized stage now gets the same
-  * twin as the final frame, not just the final-plan subset.
+  * Scope: ONE rule, installed on the session (`install`, called by
+  * every SparkEntry.queries function and by GraftExtensions.session).
+  * The session optimizer plans every final frame, every checkpoint /
+  * localCheckpoint job, every cached relation and every streaming
+  * micro-batch (foreachBatch included), so all of them get the twin.
+  * The residual surface is the casts Spark evaluates natively BEFORE
+  * user rules run — ConstantFolding of literal operands and
+  * ConvertToLocalRelation of projections over local relations. Those
+  * differ from DuckDB only at precision > 18 beyond 2^53.
+  *
+  * The rule runs in Spark's fixed-point "User Provided Optimizers"
+  * batch, so the twin emits no decimal→double cast of its own (it
+  * would be rewritten again): each [0, 2^64) limb converts as two
+  * 32-bit halves — each exact as a long and as a double, hi·2^32 exact
+  * — joined by ONE add, which is the same correctly rounded double.
   *
   * Validated-scale fence (round-15 ADVICE, low): the empirical model
   * was fuzz-validated for s = 0..6 on the hugeint path (and the
   * int64 path's 10^s descale divisor is an exact double for every
   * representable s ≤ 18). A p>18 cast with s > 6 would rely on an
-  * untested unscaling multiply, so rewrite() leaves it NATIVE and
+  * untested unscaling multiply, so the rule leaves it NATIVE and
   * prints one loud stderr line instead of silently trusting the
   * model — duckTwin itself refuses such inputs. No graded key emits
   * one (the round-15 sweep + this fence's stderr stay silent).
@@ -75,6 +78,18 @@ object DuckCast {
     * fuzz-validated s = 0..6 (DuckCastSpec + tools/duckcast_fuzz.py). */
   private[graft] def validated(d: DecimalType): Boolean =
     d.precision <= 18 || d.scale <= 6
+
+  /** Correctly rounded double of an integral decimal x ∈ [0, 2^64)
+    * without a decimal→double cast: x = hi·2^32 + lo, both halves
+    * < 2^32 (exact longs, exact doubles), so the single add is the
+    * only rounding. */
+  private def u64ToDouble(x: Expression): Expression = {
+    val two32 = Literal(Decimal(1L << 32), DecimalType(10, 0))
+    Add(
+      Multiply(Cast(IntegralDivide(x, two32), DoubleType),
+        Literal(4294967296.0)),
+      Cast(Cast(Pmod(x, two32), LongType), DoubleType))
+  }
 
   private[graft] def duckTwin(child: Expression, d: DecimalType): Expression = {
     require(validated(d),
@@ -94,40 +109,49 @@ object DuckCast {
           DecimalType(38, 0))
       val two64 = Literal(Decimal(Two64), DecimalType(38, 0))
       val lo = Pmod(u, two64)
+      // IntegralDivide yields a long: |up| < 10^38 / 2^64 < 2^63
       val up = IntegralDivide(Subtract(u, lo), two64)
       val negSmall = Subtract(
-        UnaryMinus(Cast(
-          Subtract(Literal(Decimal(Two64 - 1), DecimalType(38, 0)), lo),
-          DoubleType)),
+        UnaryMinus(u64ToDouble(
+          Subtract(Literal(Decimal(Two64 - 1), DecimalType(38, 0)), lo))),
         Literal(1.0))
-      val general = Add(Cast(lo, DoubleType),
+      val general = Add(u64ToDouble(lo),
         Multiply(Cast(up, DoubleType), Literal(math.pow(2, 64))))
       descale(If(EqualTo(up, Literal(-1L)), negSmall, general))
     }
   }
 
-  /** Rewrite every decimal→double cast in df's analyzed plan. */
-  def rewrite(spark: SparkSession, df: DataFrame): DataFrame = {
-    var n = 0
-    // transformUpWithSubqueries: scalar/EXISTS subquery plans carry
-    // their own emissions (decorrelated aggregates), so the plain
-    // transformUp missed casts nested inside them
-    val out = df.queryExecution.analyzed.transformUpWithSubqueries {
-      case op => op.transformExpressionsUp {
-        case c @ Cast(child, DoubleType, _, _)
-            if child.dataType.isInstanceOf[DecimalType] =>
-          val d = child.dataType.asInstanceOf[DecimalType]
-          if (validated(d)) { n += 1; duckTwin(child, d) }
-          else {
-            // Unvalidated-scale fence: keep the native cast, loudly.
-            System.err.println(
-              s"[duckcast] UNVALIDATED DECIMAL(${d.precision},${d.scale})" +
-                "->DOUBLE left native (twin model fuzz-validated only to" +
-                " scale 6 on the hugeint path)")
-            c
-          }
+  /** The twin as a session optimizer rule. Nullability is carried over
+    * from the replaced cast, so every operator's output schema is
+    * unchanged. Subquery plans are covered too (transformUpWithSubqueries). */
+  private object TwinRule extends Rule[LogicalPlan] {
+    override def apply(plan: LogicalPlan): LogicalPlan =
+      plan.transformUpWithSubqueries {
+        case op => op.transformExpressionsUp {
+          case c @ Cast(child, DoubleType, _, _)
+              if child.dataType.isInstanceOf[DecimalType] =>
+            val d = child.dataType.asInstanceOf[DecimalType]
+            if (validated(d)) {
+              val t = duckTwin(child, d)
+              if (c.nullable) t else KnownNotNull(t)
+            } else {
+              // Unvalidated-scale fence: keep the native cast, loudly.
+              System.err.println(
+                s"[duckcast] UNVALIDATED DECIMAL(${d.precision},${d.scale})" +
+                  "->DOUBLE left native (twin model fuzz-validated only to" +
+                  " scale 6 on the hugeint path)")
+              c
+            }
+        }
       }
+  }
+
+  /** Add the twin rule to the session's optimizer; idempotent. */
+  def install(spark: SparkSession): Unit = {
+    val ex = spark.experimental
+    ex.synchronized {
+      if (!ex.extraOptimizations.contains(TwinRule))
+        ex.extraOptimizations = ex.extraOptimizations :+ TwinRule
     }
-    if (n == 0) df else ColumnBridge.ofRows(spark, out)
   }
 }

@@ -11,10 +11,12 @@ import graft.functions.LongArrayDot
   *   spark.sql("SELECT long_array_dot(a, b) FROM t")
   *
   * Activate with .withExtensions(new GraftExtensions) or
-  * spark.sql.extensions=graft.GraftExtensions. No custom optimizer rules
-  * or planner strategies are injected: the graded surface composes from
-  * Catalyst built-ins by design (SURVEY §4.2-4.3), and the one custom
-  * expression earns its place through profiling, not novelty.
+  * spark.sql.extensions=graft.GraftExtensions. No planner strategies
+  * are injected: the graded surface composes from Catalyst built-ins by
+  * design (SURVEY §4.2-4.3), and the one custom expression earns its
+  * place through profiling, not novelty. The one custom optimizer rule,
+  * DuckCast's decimal→double twin, is installed per session by
+  * `GraftExtensions.session` and by every SparkEntry.queries function.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
@@ -66,6 +68,7 @@ object GraftExtensions {
     // never ran — re-register the functions idempotently.
     org.apache.spark.sql.graftbridge.ColumnBridge.registerTempFunction(
       s, "long_array_dot", buildLongArrayDot(_))
+    DuckCast.install(s)
     s
   }
 }

@@ -51,16 +51,7 @@ object Components {
 
   /** @param pairs undirected edges as (a, b) long columns (any names,
     *              positional); returns (id, lbl) with lbl = component min. */
-  def minLabel(pairs: DataFrame, verbose: Boolean = false): DataFrame = {
-    // env-gated loop diagnostics (round-17): per-round wall time + label
-    // sum on stderr, so a probe can attribute loop cost without the UI
-    val diag = verbose || sys.env.contains("SPARK_GRAFT_COMPONENTS_DIAG")
-    var t0 = System.nanoTime()
-    def lap(tag: String): Unit = if (diag) {
-      System.err.println(
-        f"[components] $tag ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      t0 = System.nanoTime()
-    }
+  def minLabel(pairs: DataFrame): DataFrame = {
     val cols = pairs.columns
     val p = pairs.select(col(cols(0)).as("ea"), col(cols(1)).as("eb"))
     val edges = p
@@ -77,15 +68,12 @@ object Components {
     def sumOf(df: DataFrame): Long =
       df.agg(coalesce(sum(col("lbl")), lit(0L))).head().getLong(0)
     var lblSum = sumOf(labels)
-    lap("seed")
     var changed = true
-    var round = 0
     while (changed) {
-      round += 1
       // Round 17: THREE chained pointer jumps per round (the composed
       // map lbl⁴) instead of one — the embedding near-dup graph showed
       // 10 propagation rounds at ~0.25 s of fixed job/exchange floor
-      // each (diag above); deeper in-round composition cuts rounds to
+      // each; deeper in-round composition cuts rounds to
       // ~log₄(chain) for three extra LABELS-SIZED joins inside the SAME
       // job, which is far cheaper than extra rounds. (SEVEN jumps was
       // A/B'd and REVERTED: rounds didn't fall further and the 8-deep
@@ -109,8 +97,6 @@ object Components {
         .unionByName(prop)
         .groupBy(col("id")).agg(min(col("lbl")).as("lbl")))
       val nextSum = sumOf(next)
-      if (verbose) println(s"DIAG round=$round lblSum=$nextSum")
-      lap(s"round $round sum=$nextSum")
       changed = nextSum != lblSum
       lblSum = nextSum
       labels = next

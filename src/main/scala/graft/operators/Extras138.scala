@@ -55,13 +55,17 @@ object Extras138 {
       .distinct()
   }
 
+  /** Leg-dedup threshold on a closure round's incoming Δ rows, tuned on
+    * sf0.1 full-bench A/Bs (scc, scc_dag, bowtie; numbers at the loop). */
+  private val LegDedupMinDelta = 4096L
+
   /** Transitive closure of a (src, dst) edge relation by SEMI-NAIVE
     * path doubling (round 17; shared by sccLabels and q_graph_bowtie).
     *
     * The naive loop (r ← distinct(r ∪ r∘r) to a count fixpoint)
     * re-joined the FULL closure with itself every round — at sf0.1 the
     * last two rounds each expanded ~Σk³ candidate paths within SCCs to
-    * add +2 and then 0 new pairs (measured 1.4 s/round via the diag).
+    * add +2 and then 0 new pairs (measured 1.4 s/round).
     * Every pair NEW to r_i∘r_i has at least one factor in
     * Δ = r_i \ r_{i-1} (both-old factors were composed in the previous
     * round), so each round joins only Δ∘r ∪ r∘Δ, anti-joins r away and
@@ -74,14 +78,7 @@ object Extras138 {
     * distinct kept (leg/except dedup only removes duplicates).
     * Lazy checkpoints (round 16): each round's count() materializes its
     * own blocks. */
-  private[operators] def transitiveClosure(edges: DataFrame): DataFrame = {
-    val diag = sys.env.contains("SPARK_GRAFT_COMPONENTS_DIAG")
-    var t0 = System.nanoTime()
-    def lap(tag: String): Unit = if (diag) {
-      System.err.println(
-        f"[closure] $tag ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      t0 = System.nanoTime()
-    }
+  private[graft] def transitiveClosure(edges: DataFrame): DataFrame = {
     val c = edges.columns
     // (Round 17 A/B'd and REVERTED: round-robin repartitioning each
     // checkpoint to core parallelism — the two_hop treatment, on the
@@ -90,13 +87,14 @@ object Extras138 {
     // keys (scc 2.0 → 6.8 s probe-steady): the per-round exchanges and
     // the partition-count blowup on the union chain cost far more than
     // the expansion's residual serialism at these byte sizes.)
+    // Null-keyed edges reach nothing: dropped at the seed, because the
+    // EXCEPT below matches null keys as equal (a left_anti would not).
     var r = edges.select(col(c(0)).as("s"), col(c(1)).as("t"))
+      .where(col("s").isNotNull && col("t").isNotNull)
       .duckCkptLazy()
-    var n = r.count()
-    lap(s"seed n=$n")
     var delta = r
-    var dn = n
-    var grown = n > 0
+    var dn = r.count()
+    var grown = dn > 0
     while (grown) {
       // Adaptive leg dedup (§2.2 shuffle fewer bytes — when there ARE
       // bytes): a doubling round's expansion re-derives each in-SCC
@@ -108,7 +106,7 @@ object Extras138 {
       // Δ-bounded and the two extra aggregate exchanges are pure floor
       // (bowtie 2.12 → 2.83 s WITH unconditional leg dedup). The
       // row-count threshold scales with the data, not the host.
-      val dedupLegs = dn > 4096
+      val dedupLegs = dn > LegDedupMinDelta
       def leg(df: DataFrame) = if (dedupLegs) df.distinct() else df
       val r2 = leg(delta.as("a").join(r.as("b"), col("a.t") === col("b.s"))
           .select(col("a.s").as("s"), col("b.t").as("t")))
@@ -121,14 +119,12 @@ object Extras138 {
       // aliases — still trips; except does not).
       val nd = r2.except(r).duckCkptLazy()
       dn = nd.count()
-      lap(s"round new=$dn")
       if (dn == 0) grown = false
       else {
         // disjoint by construction (anti-join) — plain union of two
         // materialized checkpoint RDDs, no re-distinct of the closure
         r = r.unionByName(nd)
         delta = nd
-        n += dn
       }
     }
     r

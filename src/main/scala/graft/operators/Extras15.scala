@@ -97,12 +97,10 @@ object Extras15 {
       val out = staging.resolve("out").toString
       val chk = staging.resolve("chk").toString
       graft.streaming.StreamOps.withCappedState(s) {
-        // DuckCast at the sink boundary (round-15 ADVICE): self-driven
-        // parquet sink, invisible to SparkEntry's final-plan rewrite.
-        val q = graft.DuckCast.rewrite(s, graft.streaming.StreamOps
+        val q = graft.streaming.StreamOps
           .tumblingWithWatermark(
             graft.streaming.StreamOps.eventsFileStream(s, d))
-          .select(tsUs(col("ws")).as("ws_us"), col("event_type"), col("n")))
+          .select(tsUs(col("ws")).as("ws_us"), col("event_type"), col("n"))
           .writeStream.outputMode("append").format("parquet")
           .option("path", out).option("checkpointLocation", chk)
           .trigger(Trigger.AvailableNow())

@@ -279,9 +279,6 @@ object Extras160 {
           .where(col("bu").isNotNull && col("bu.dd") <= col("t16"))
           .select(col("qid"), col("bu.vec_id").as("vec_id"))
           .collect()
-        if (sys.env.contains("SPARK_GRAFT_ANN_TRACE"))
-          System.err.println(
-            s"[bestfirst] round $t active-queries ${baRows.length}")
         if (baRows.isEmpty) { active = false } else {
           val ba = baRows.toSeq
             .map(r => (r.getLong(0), r.getLong(1)))

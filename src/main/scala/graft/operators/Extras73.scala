@@ -81,8 +81,10 @@ object Extras73 {
       .select(col("doc_id"), col("text")).as[(Long, String)]
       .mapPartitions { it =>
         it.flatMap { case (docId, text) =>
-          val bucket = md5longJvm("split:" + docId) % 100
-          if (!keep(bucket, docId)) Iterator.empty
+          // a null text has no grams
+          if (text == null) Iterator.empty
+          else if (!keep(md5longJvm("split:" + docId) % 100, docId))
+            Iterator.empty
           else {
             val ws = text.split(" ", -1)
             if (ws.length < 13) Iterator.empty

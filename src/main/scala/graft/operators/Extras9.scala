@@ -104,14 +104,10 @@ object Extras9 {
       val in = Files.createDirectories(staging.resolve("in"))
       val chk = staging.resolve("chk").toString
       val schema = s.read.parquet(s"$split/a.parquet").schema
-      // DuckCast at the sink boundary (round-15 ADVICE): this pipeline
-      // materializes via its own writeStream, invisible to SparkEntry's
-      // final-plan rewrite.
-      def agg: DataFrame = graft.DuckCast.rewrite(s,
-        s.readStream.schema(schema).parquet(in.toString)
-          .groupBy(col("event_type"))
-          .agg(count(lit(1)).as("n"),
-            sum((col("value").cast(D2) * 100).cast("long")).as("total_cents")))
+      def agg: DataFrame = s.readStream.schema(schema).parquet(in.toString)
+        .groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n"),
+          sum((col("value").cast(D2) * 100).cast("long")).as("total_cents"))
       def runOnce(name: String): Unit = {
         val q = agg.writeStream.outputMode("complete")
           .format("memory").queryName(name)

@@ -2,38 +2,28 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 
-/** Shared materialization boundary for every graded operator (round-15
-  * ADVICE, medium): `DuckCast.rewrite` transforms only the FINAL
-  * analyzed plan, so a decimal→double emission inside a stage that an
-  * operator materializes early — `localCheckpoint()` in a driver loop
-  * or shared-subtree cut — executed with Spark's NATIVE cast and was
-  * invisible to both the twin and FenceProbe. `duckCkpt` closes that
-  * hole at the single choke point all operators share: it applies the
-  * emission twin BEFORE checkpointing, so the frozen rows already
-  * carry DuckDB's conversion semantics at any magnitude. (Streaming
-  * sinks, the other materialization boundary, get the same treatment
-  * in StreamOps' runners.) Safe by DuckCast's monotonicity argument:
-  * below 2^53 the twin IS the native cast bit-for-bit; above, it is
-  * what the DuckDB oracle emits.
+/** Shared materialization boundary for every graded operator: a
+  * driver-loop or shared-subtree cut at lineage depth 1. perfbench's
+  * `operators.ckpt_jobs` counts checkpoint jobs by THIS call site, so
+  * operators checkpoint through here. The decimal→double twin needs
+  * nothing here: the checkpoint job is planned by the session
+  * optimizer, which carries DuckCast's rule.
   */
 package object operators {
   implicit final class DuckCkptOps(private val df: DataFrame)
       extends AnyVal {
-    def duckCkpt(): DataFrame =
-      DuckCast.rewrite(df.sparkSession, df).localCheckpoint()
+    def duckCkpt(): DataFrame = df.localCheckpoint()
 
-    /** Lazy twin of duckCkpt for the iterative loops (round 16): the
+    /** Lazy form of duckCkpt for the iterative loops (round 16): the
       * plan is truncated to a LogicalRDD immediately (identical
-      * lineage-depth-1 semantics and the same pre-checkpoint DuckCast
-      * rewrite), but the RDD materializes inside the NEXT action
-      * instead of its own dedicated job — in every closure/peel loop
-      * that action is the round's own count()/scalar aggregate, so one
-      * scheduler round per iteration disappears. Use ONLY where a
-      * single downstream action follows before the frame fans out;
-      * a frame that self-joins or fans out UNMATERIALIZED would compute
-      * its partitions once per reference inside one job (the eager
-      * form stays the default for shared subtrees). */
-    def duckCkptLazy(): DataFrame =
-      DuckCast.rewrite(df.sparkSession, df).localCheckpoint(eager = false)
+      * lineage-depth-1 semantics), but the RDD materializes inside the
+      * NEXT action instead of its own dedicated job — in every
+      * closure/peel loop that action is the round's own count()/scalar
+      * aggregate, so one scheduler round per iteration disappears. Use
+      * ONLY where a single downstream action follows before the frame
+      * fans out; a frame that self-joins or fans out UNMATERIALIZED
+      * would compute its partitions once per reference inside one job
+      * (the eager form stays the default for shared subtrees). */
+    def duckCkptLazy(): DataFrame = df.localCheckpoint(eager = false)
   }
 }

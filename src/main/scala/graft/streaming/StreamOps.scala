@@ -75,7 +75,7 @@ object StreamOps {
     * shuffles in this bench, does not apply to stateful streaming. So the
     * memory-sink runners cap the state partitioning at 8 for the duration
     * of the run (measured on the stream-stream join at sf0.1: 8.5 s at 32
-    * partitions → 2.7 s at 8, identical results — ShuffleProbe). On a real
+    * partitions → 2.7 s at 8, identical results). On a real
     * cluster, size spark.sql.shuffle.partitions to state volume instead;
     * results are partition-count-invariant (PartitionInvarianceSpec).
     * State partitioning is fixed at FIRST query start by the checkpoint,
@@ -118,27 +118,15 @@ object StreamOps {
     }
   }
 
-  /** A streaming key's pipeline executes ENTIRELY inside writeStream —
-    * the graded frame is a scan of the sink table, so SparkEntry's
-    * final-plan DuckCast.rewrite sees no decimal emissions (round-15
-    * ADVICE, medium). Rewriting here, before the sink materializes the
-    * rows, gives streaming stages the same DuckDB-exact decimal→double
-    * twin as every batch plan. */
-  private def duckTwinned(df: DataFrame): DataFrame =
-    graft.DuckCast.rewrite(df.sparkSession, df)
-
-  private def runSink(df0: DataFrame, name: String, mode: String): DataFrame = {
-    val df = duckTwinned(df0)
+  private def runSink(df: DataFrame, name: String, mode: String): DataFrame =
     withStatePartitions(df) {
       val q = df.writeStream.outputMode(mode)
         .format("memory").queryName(name)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      logProgress(q, name)
       df.sparkSession.table(name)
     }
-  }
 
   /** Run a (streaming) frame to completion into a memory sink under
     * Trigger.AvailableNow and return the sink table. */
@@ -155,43 +143,6 @@ object StreamOps {
     * emit-once rather than replace. */
   def runToMemoryAppend(df: DataFrame, name: String): DataFrame =
     runSink(df, name, "append")
-
-  /** Attribution instrument (round-12 verdict item 4): with
-    * SPARK_GRAFT_STREAM_PROGRESS=1, print per-micro-batch wall/commit
-    * durations after a run so driver-vs-builder streaming elevations
-    * separate into "more batches" vs "same batches, slower state
-    * commits" (host pressure). Off in graded runs — stdout only. */
-  private def logProgress(
-      q: org.apache.spark.sql.streaming.StreamingQuery,
-      name: String): Unit =
-    if (sys.env.contains("SPARK_GRAFT_STREAM_PROGRESS")) {
-      val ps = q.recentProgress
-      println(s"[stream-progress] $name batches=${ps.length}")
-      ps.foreach { p =>
-        val d = p.durationMs
-        println(s"[stream-progress] $name batch=${p.batchId} " +
-          s"rows=${p.numInputRows} triggerMs=${d.get("triggerExecution")} " +
-          s"addBatchMs=${d.get("addBatch")} " +
-          s"stateRows=${p.stateOperators.map(_.numRowsTotal).sum} " +
-          s"stateCommitMs=${p.stateOperators.map(_.commitTimeMs).sum} " +
-          s"stateBytes=${p.stateOperators.map(_.memoryUsedBytes).sum}")
-      }
-      // Working-set summary line (round-14 verdict item 5): ONE
-      // machine-readable row per run so the bench-sequence state
-      // accumulation question — does key N's RocksDB working set tax
-      // key N+1? — is answered by per-key columns, not guesses.
-      val last = ps.lastOption
-      val commitTotal = ps.map(_.stateOperators.map(_.commitTimeMs).sum).sum
-      val trigTotal = ps.flatMap(p =>
-        Option(p.durationMs.get("triggerExecution")).map(_.longValue)).sum
-      println(s"[state-probe] key=$name batches=${ps.length} " +
-        s"triggerMsTotal=$trigTotal commitMsTotal=$commitTotal " +
-        s"finalStateRows=${last.map(_.stateOperators.map(_.numRowsTotal).sum).getOrElse(0L)} " +
-        s"finalStateBytes=${last.map(_.stateOperators.map(_.memoryUsedBytes).sum).getOrElse(0L)} " +
-        s"provider=${q.sparkSession.conf.get(
-          "spark.sql.streaming.stateStore.providerClass", "default")
-          .split('.').last}")
-    }
 
   /** Tumbling 1h counts per event type (same logic as q_stream_tumbling). */
   def tumbling(df: DataFrame): DataFrame =

@@ -76,6 +76,19 @@ class Extras138Spec extends QuerySuiteBase {
     assert(got == expected)
   }
 
+  test("a null-keyed edge leaves the transitive closure unchanged") {
+    import spark.implicits._
+    // a 3-cycle with a tail: closure = {1,2,3}² ∪ {1,2,3}×{4}
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L))
+      .map { case (a, b) => (Option(a), Option(b)) }
+    def closure(es: Seq[(Option[Long], Option[Long])]) =
+      operators.Extras138.transitiveClosure(es.toDF("src", "dst"))
+        .collect().map(r => (r.get(0), r.get(1))).toSet
+    val clean = closure(edges)
+    assert(clean.size == 12)
+    assert(closure(edges ++ Seq((None, Some(1L)), (Some(4L), None))) == clean)
+  }
+
   test("fouter's purchase side equals the left-outer key's rows") {
     // Restricting the full-outer result to rows with a purchase must
     // reproduce q_stream_live_louter exactly (same join, same decided

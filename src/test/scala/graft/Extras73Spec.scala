@@ -24,6 +24,19 @@ class Extras73Spec extends QuerySuiteBase {
     rows.foreach(r => assert(r.getLong(1) > 0))
   }
 
+  test("13-gram kernel: a null-text document contributes no grams") {
+    import org.apache.spark.sql.functions._
+    val dir = java.nio.file.Files.createTempDirectory("graft-nulltext")
+    val docs = Tables.documents(spark, sf)
+    val nextId = docs.agg(max(col("doc_id"))).head().getLong(0) + 1
+    docs.unionByName(docs.limit(1).withColumn("doc_id", lit(nextId))
+        .withColumn("text", lit(null).cast("string")))
+      .write.parquet(s"$dir/documents.parquet")
+    def hits(d: String) = operators.Extras73
+      .contamination13(spark, d, benchIdCap = Long.MaxValue).collect().toSeq
+    assert(hits(dir.toString) == hits(sf))
+  }
+
   test("cuped: variance reduction in [0,1]; adjusted diff finite") {
     val r = q("q_evt_cuped").head()
     val vr = r.getDouble(5)
