@@ -14,27 +14,6 @@ import org.apache.spark.sql.SparkSession
   * Run: SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=32 \
   *   sbt "runMain graft.QueryProbe [warm keys...] -- <timed keys...>"
   */
-/** Prints the N keys that precede each argument key in the EXACT
-  * iteration order Bench times them (SparkEntry.orderedKeys — since
-  * round 16 a structural family-declared/sorted-within-family order,
-  * stable under surface growth; rounds ≤15 used the merged HashMap's
-  * hash order, which permuted wholesale on every key addition) — the
-  * input to a bench-sequence A/B: QueryProbe with those predecessors
-  * as warm keys reproduces the JVM/state context the suspect saw in
-  * the graded run. */
-object KeyOrder {
-  def main(args: Array[String]): Unit = {
-    val order = SparkEntry.orderedKeys
-    val n = sys.env.getOrElse("SPARK_GRAFT_ORDER_N", "8").toInt
-    args.foreach { k =>
-      val i = order.indexOf(k)
-      if (i < 0) println(s"[order] $k NOT FOUND")
-      else println(s"[order] $k idx=$i prev=[${
-        order.slice(math.max(0, i - n), i).mkString(" ")}]")
-    }
-  }
-}
-
 object QueryProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

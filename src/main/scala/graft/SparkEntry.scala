@@ -207,8 +207,9 @@ object SparkEntry {
     * a key to an existing family inserts at one alphabetical slot, so
     * every other key keeps its exact predecessor context (only the
     * inserted key's immediate successor sees one new predecessor).
-    * Bench, KeyOrder, and QueryProbe all iterate THIS (KeyOrderSpec
-    * pins the append/shift-stability property). */
+    * Bench iterates THIS; a QueryProbe run reproduces a key's bench
+    * context by passing its predecessors here as warm keys
+    * (ContractSpec pins the append/shift-stability property). */
   val orderedKeys: Seq[String] =
     families.iterator.flatMap(_._1.keys.toSeq.sorted).toSeq
 

@@ -119,16 +119,7 @@ object Extras10 {
     // edge relation stays partitioned by src across iterations and only
     // the (node, rank) relation — orders of magnitude smaller — moves.
     "q_graph_pagerank" -> ((s, d) => {
-      val v = Tables.events(s, d)
-        .where(pmod(col("user_id"), lit(7L)) === 0)
-        .select(date_trunc("hour", col("ts")).as("h"),
-          col("event_type").as("t"), col("user_id").as("u"))
-        .distinct()
-      val und = v.as("x").join(v.as("y"),
-          col("x.h") === col("y.h") && col("x.t") === col("y.t")
-            && col("x.u") < col("y.u"))
-        .select(col("x.u").as("a"), col("y.u").as("b"))
-        .distinct()
+      val und = Extras11.undirectedEdges(s, d)
       val edges = und.select(col("a").as("src"), col("b").as("dst"))
         .unionByName(und.select(col("b").as("src"), col("a").as("dst")))
       val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))

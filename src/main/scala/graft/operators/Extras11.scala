@@ -22,11 +22,14 @@ object Extras11 {
   import Det._
 
   /** The co-occurrence graph q_graph_triangles/q_graph_pagerank defined
-    * (same-hour, same-event-type user pairs over the user_id%7 slice) —
-    * one definition so the four graph kernels are views of one graph. */
-  private[operators] def undirectedEdges(s: SparkSession, d: String): DataFrame = {
+    * (same-hour, same-event-type user pairs over the user_id % `mod`
+    * slice; canonical a < b edges) — one definition so every graph
+    * kernel is a view of one graph. q_graph_two_hop reads the denser
+    * user_id % 3 slice; every other kernel the % 7 one. */
+  private[operators] def undirectedEdges(s: SparkSession, d: String,
+      mod: Long = 7L): DataFrame = {
     val v = Tables.events(s, d)
-      .where(pmod(col("user_id"), lit(7L)) === 0)
+      .where(pmod(col("user_id"), lit(mod)) === 0)
       .select(date_trunc("hour", col("ts")).as("h"),
         col("event_type").as("t"), col("user_id").as("u"))
       .distinct()

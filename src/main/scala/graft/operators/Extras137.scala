@@ -73,36 +73,15 @@ object Extras137 {
         // argmin/argmax picks the identical row (output unchanged).
         .withColumn("q6", (col("q") * 1000000).cast("long"))
         .duckCkpt()
-      // coarse codebook: ADAPTIVE cell count (smallest c in {8, 16,
-      // 32, 64} holding expected occupancy ≤ 64 — integer thresholds
-      // only, the q_llm_ann_lsh_adaptive scale rule: fixed 8 cells at
-      // 8× corpus decayed recall@10 0.85 → 0.45, recorded in
-      // BASELINE.md), full-64-dim DOT-PRODUCT assignment — the
-      // q_llm_ann_ivf convention; an L2 coarse assignment was A/B'd
+      // coarse codebook: the shared ADAPTIVE cell policy
+      // (Extras148.cellPolicy: 8 → 64 cells by integer occupancy
+      // thresholds, nprobe 2 → 4), full-64-dim DOT-PRODUCT assignment —
+      // the q_llm_ann_ivf convention; an L2 coarse assignment was A/B'd
       // first and scattered true neighbors across cells (recall@10
       // 0.15), because these embeddings cluster by direction.
-      val nc = Tables.embeddings(s, d).agg(count(lit(1)).as("nv"))
-        .select(when(col("nv") <= 512, 8L)
-          .when(col("nv") <= 1024, 16L)
-          .when(col("nv") <= 2048, 32L)
-          .otherwise(64L).as("c"))
-        // nprobe grows with the cell count (2 of 8 → 4 of ≥32) so the
-        // probed fraction falls while staying recall-viable.
-        .withColumn("np", when(col("c") <= 16, 2L).otherwise(4L))
-      val cb8 = e.crossJoin(broadcast(nc))
-        .where(col("vec_id") < col("c"))
-        .select(col("vec_id").as("ccid"), col("dim"),
-          col("q6").as("cq6"))
+      val nc = Extras148.cellPolicy(s, d)
+      val cb8 = Extras148.centroidsOf(e, nc)
       val npCol = broadcast(nc.select(col("np")))
-      val cw = Window.partitionBy(col("vec_id"))
-        .orderBy(col("cdot").desc, col("ccid"))
-      // cdot is the exact BIGINT micro² dot (= the decimal dot × 1e12
-      // — same order). Used corpus-wide in the build, query-only in
-      // the search.
-      def coarseDots(v: DataFrame): DataFrame =
-        v.join(broadcast(cb8), "dim")
-          .groupBy(col("vec_id"), col("ccid"))
-          .agg(sum(col("q6") * col("cq6")).as("cdot"))
       // PQ codebook (Extras125 shape); encode distance is the exact
       // BIGINT micro² sum — identical argmin to the decimal form
       // (scale 1e12).
@@ -121,8 +100,8 @@ object Extras137 {
         Seq(s"$d/embeddings.parquet"),
         "adaptive-cell coarse assign + 16x64 PQ code table, v1") {
         dest =>
-          coarseDots(e)
-            .withColumn("rn", row_number().over(cw))
+          Extras148.coarseDots(e, cb8)
+            .withColumn("rn", row_number().over(Extras148.coarseOrder))
             .where(col("rn") === 1)
             .select(col("vec_id"), col("ccid").as("cell"))
             .write.parquet(s"$dest/assign")
@@ -143,8 +122,9 @@ object Extras137 {
       // dots recomputed for the 4 query vectors only (identical rows
       // to the corpus-wide relation restricted to the qids: same
       // per-vec_id groups, same window order)
-      val qprobe = coarseDots(e.where(col("vec_id").between(0, 3)))
-        .withColumn("rn", row_number().over(cw))
+      val qprobe = Extras148.coarseDots(
+          e.where(col("vec_id").between(0, 3)), cb8)
+        .withColumn("rn", row_number().over(Extras148.coarseOrder))
         .crossJoin(npCol)
         .where(col("rn") <= col("np"))
         .select(col("vec_id").as("qid"), col("ccid").as("cell"))

@@ -28,16 +28,7 @@ object Extras14 {
     // oracle-checked against a recursive-CTE min-label fixpoint on the
     // GRAPH family's edge relation. Component id = min node id.
     "q_graph_components" -> ((s, d) => {
-      val v = Tables.events(s, d)
-        .where(pmod(col("user_id"), lit(7L)) === 0)
-        .select(date_trunc("hour", col("ts")).as("h"),
-          col("event_type").as("t"), col("user_id").as("u"))
-        .distinct()
-      val und = v.as("x").join(v.as("y"),
-          col("x.h") === col("y.h") && col("x.t") === col("y.t")
-            && col("x.u") < col("y.u"))
-        .select(col("x.u").as("a"), col("y.u").as("b"))
-        .distinct()
+      val und = Extras11.undirectedEdges(s, d)
       Components.minLabel(und)
         .select(col("id").as("u"), col("lbl").as("component"))
         .orderBy("u")

@@ -1,217 +1,61 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.{FixtureCache, Tables}
 
-/** Round-13 additions, part 2: RESIDUAL-encoded IVF-PQ (the round-12
-  * verdict's top new-surface item — the production IVFADC shape:
-  * PQ codes quantize the residual v − centroid(cell) instead of the
-  * raw vector, which is what holds recall when cells widen at corpus
-  * scale; the non-residual q_llm_ann_ivfpq stays as the stated A/B
-  * baseline).
+/** The shared ANN index kernel, plus its first two users.
   *
-  * Scale shape: identical to ivfpq — corpus-linear coarse assignment
-  * and residual encode (fact × broadcast codebooks), cell-pruned ADC
-  * scan (only nprobe/#cells of the code table touched per query),
-  * ≤4·100-row exact rerank. The residual twist adds ONE broadcast
-  * join (centroid subtraction) and keys the ADC table by probed CELL
-  * (the query's residual differs per probed cell) — 4·np·16·256 rows,
-  * still broadcast-size.
+  * RESIDUAL IVF-PQ (the production IVFADC shape: PQ codes quantize the
+  * residual v − centroid(cell), which holds recall when cells widen at
+  * corpus scale). One build and one search serve the three residual
+  * keys; each passes only its fixture name and salt, its codebook
+  * training and its rerank shortlist depth:
+  *   - q_llm_ann_ivfpq_residual: the stride seed book, untrained;
+  *   - q_llm_ann_ivfpq_lloyd (Extras152): one floor-mean Lloyd step;
+  *   - q_llm_ann_ivfpq_lloyd2 (Extras160): two round-to-nearest steps
+  *     and a corpus-proportional shortlist.
+  * Build (`buildResidualIvfpq`, charged to the FixtureCache ingest):
+  * quantized explode → adaptive cell policy → dot-product coarse
+  * assignment → residuals → 256-codeword stride seed book → Lloyd
+  * steps → packed argmin encode. Search (`searchResidualIvfpq`):
+  * nprobe cell probes of the 4 query vectors → per-probed-cell
+  * residual ADC table → cell-pruned ADC scan → exact rerank on raw
+  * vectors.
+  *
+  * HNSW (`buildHnswIndex`, `hnswBeamSearch`): packed micro vectors,
+  * the same coarse cells, a per-cell kNN + hub + hub-mesh graph, and a
+  * beam-16 layer-0 search from a caller-chosen entry. q_llm_ann_hnsw
+  * enters at the nearest stride-16 node; q_llm_ann_hnsw_ml (Extras152)
+  * descends two strided upper layers first and reuses the layer-0
+  * fixture and the same graph builder for its stride-16 layer;
+  * q_llm_ann_hnsw_bestfirst (Extras160) searches the same fixture one
+  * node at a time.
   *
   * Determinism contract (SURVEY §2.13): every distance is an exact
   * BIGINT micro² sum (components are 6-dp-quantized micros ≤ ~5.3e5,
   * residual diffs ≤ ~2.2e6, per-sub sums ≤ 2e13 — far inside int64),
-  * every argmin/top-k ties on an id, and the two emitted distance
-  * columns are ONE IEEE division (exact-int/1e12, both < 2^53) + r6
-  * on both engines.
+  * every argmin/top-k ties on an id, the Lloyd means are exact
+  * positive-shifted integer divisions, and every emitted distance
+  * column is ONE IEEE division (exact-int/1e12, < 2^53) + r6 on both
+  * engines.
   */
 object Extras148 {
   import graft.Det._
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
-    // RESIDUAL IVF-PQ — coarse adaptive cells (the ivfpq convention:
-    // dot-product assignment, 8→64 cells by integer occupancy
-    // thresholds, nprobe 2→4); PQ codewords are the RESIDUALS of 256
-    // stride-sampled vectors outside the centroid block w.r.t. their
-    // own cells; candidates ADC-scan
-    // against the query's per-cell residual table; exact top-10
-    // rerank on raw vectors.
-    "q_llm_ann_ivfpq_residual" -> ((s, d) => {
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), posexplode(col("embedding")))
-        .toDF("vec_id", "pos", "x")
-        .select(col("vec_id"), (col("pos") + 1).as("dim"),
-          (round(col("x").cast("double"), 6).cast(DecimalType(18, 6))
-            * 1000000).cast("long").as("q6"))
-        .withColumn("sub", expr("(dim - 1) div 4"))
-        // fan out BEFORE checkpointing: the small parquet file scans
-        // as one partition, which would serialize the ×c coarse-dot
-        // and ×256 encode expansions below onto one core
-        .repartition(s.conf.get("spark.sql.shuffle.partitions").toInt,
-          col("vec_id"))
-        .duckCkpt() // shared-subtree rule (ivfpq precedent)
-      val nc = Tables.embeddings(s, d).agg(count(lit(1)).as("nv"))
-        .select(col("nv"), when(col("nv") <= 512, 8L)
-          .when(col("nv") <= 1024, 16L)
-          .when(col("nv") <= 2048, 32L)
-          .otherwise(64L).as("c"))
-        .withColumn("np", when(col("c") <= 16, 2L).otherwise(4L))
-        // codeword stride: 256 residual codewords (standard 8-bit PQ
-        // subquantizers) sampled ACROSS the
-        // corpus, skipping the centroid block [0, c) — a codeword set
-        // overlapping the centroids degenerates to near-zero residuals
-        // the moment c widens to 64 (measured: recall@10 0.93 -> 0.10
-        // at the 8x probe before this rule; the coarse-anchor lesson
-        // from round 12 applied to the PQ level).
-        .withColumn("s", greatest(lit(1L),
-          expr("(nv - c) div 256")))
-      val cent = e.crossJoin(broadcast(nc))
-        .where(col("vec_id") < col("c"))
-        .select(col("vec_id").as("ccid"), col("dim"),
-          col("q6").as("c6"))
-      val cw = Window.partitionBy(col("vec_id"))
-        .orderBy(col("cdot").desc, col("ccid"))
-      def coarseDots(v: DataFrame): DataFrame =
-        v.join(broadcast(cent), "dim")
-          .groupBy(col("vec_id"), col("ccid"))
-          .agg(sum(col("q6") * col("c6")).as("cdot"))
-      // (cent derives from e: rename its dim to dodge the ambiguous
-      // self-join lineage check)
-      val centR = cent.withColumnRenamed("dim", "cdim")
-      // INDEX BUILD, amortized (round-13 verdict item 1): the coarse
-      // assignment, the residual codebook and the residual PQ code
-      // table — the corpus-sized passes that dominated a cold
-      // invocation (builder warm 6.85 s, nearly all build) — persist
-      // as parquet keyed by the source snapshot. The graded query is
-      // SEARCH against the built index: the production IVFADC
-      // deployment, where the index is built once at ingest and every
-      // query pays only cell-pruned ADC scan + bounded rerank. All
-      // artifacts are exact BIGINTs: parquet round-trip is
-      // bit-identical, results unchanged.
-      val idxDir = FixtureCache.ensure("ann_ivfpq_residual_idx",
+    // RESIDUAL IVF-PQ with the untrained stride seed book
+    "q_llm_ann_ivfpq_residual" -> ((s, d) => searchResidualIvfpq(s, d,
+      FixtureCache.ensure("ann_ivfpq_residual_idx",
         Seq(s"$d/embeddings.parquet"),
-        "residual IVF-PQ: assign + stride-256 residual codebook + " +
-          "code table, v1") { dest =>
-        coarseDots(e).withColumn("rn", row_number().over(cw))
-          .where(col("rn") === 1)
-          .select(col("vec_id"), col("ccid").as("cell"))
-          .write.parquet(s"$dest/assign")
-        // corpus residuals r = v − centroid(cell(v)) — exact micros;
-        // the assignment re-reads its own just-written artifact
-        val assignB = s.read.parquet(s"$dest/assign")
-        val resid = e.join(assignB, "vec_id")
-          .join(broadcast(centR),
-            col("cell") === col("ccid") && col("dim") === col("cdim"))
-          .select(col("vec_id"), col("dim"), col("sub"),
-            (col("q6") - col("c6")).as("r6"))
-          .duckCkpt() // feeds the codebook AND the encode
-        // residual codebook: 256 stride-sampled residuals from
-        // outside the centroid block (see the `s` comment above)
-        resid.crossJoin(broadcast(nc.select(col("c"), col("s"))))
-          .where(col("vec_id") >= col("c")
-            && (col("vec_id") - col("c")) % col("s") === 0
-            && expr("(vec_id - c) div s") < 256)
-          .select(col("vec_id").as("cw"), col("dim"),
-            col("r6").as("rc6"))
-          .write.parquet(s"$dest/rcb")
-        val rcbB = s.read.parquet(s"$dest/rcb")
-        // Encode: per (vector, subspace) argmin over the 256
-        // codewords. The per-dim flat join form shuffles #vec × 16 ×
-        // 256 grouped rows (65M at the 8× probe, measured 94 s);
-        // instead pack each (vec, sub) residual and each (sub, cw)
-        // codeword into 4-dim arrays, compute each distance as ONE
-        // codegen'd zip_with fold, and take argmin via
-        // min(struct(dist, cw)) — lexicographic struct min = min dist
-        // tie-broken to smallest cw, and the map-side partial agg
-        // collapses the 65M rows to #vec × 16 before any shuffle.
-        // Exact BIGINT arithmetic throughout. repartition after the
-        // tiny groupBy: AQE coalesces the 32k-row shuffle to ONE
-        // partition, putting the ×256 codebook expansion below on a
-        // single core (measured 16 s at sf0.1; the expansion itself
-        // is the dominant work and must fan out).
-        val rsub = resid.groupBy(col("vec_id"), col("sub"))
-          .agg(sort_array(collect_list(struct(col("dim"), col("r6"))))
-            .as("rv"))
-          .repartition(
-            s.conf.get("spark.sql.shuffle.partitions").toInt,
-            col("vec_id"))
-        val cbSub = rcbB
-          .withColumn("sub", expr("(dim - 1) div 4"))
-          .groupBy(col("sub"), col("cw"))
-          .agg(sort_array(collect_list(struct(col("dim"), col("rc6"))))
-            .as("cv"))
-        rsub.join(broadcast(cbSub), "sub")
-          .select(col("vec_id"), col("sub"), col("cw"), expr(
-            """aggregate(zip_with(rv, cv,
-                 (a, b) -> (a.r6 - b.rc6) * (a.r6 - b.rc6)),
-                 CAST(0 AS BIGINT), (s, v) -> s + v)""").as("dist"))
-          .groupBy(col("vec_id"), col("sub"))
-          .agg(min(struct(col("dist"), col("cw"))).as("m"))
-          .select(col("vec_id"), col("sub"), col("m.cw").as("code"))
-          .write.parquet(s"$dest/codes")
-      }
-      val assign = s.read.parquet(s"$idxDir/assign")
-      val rcb = s.read.parquet(s"$idxDir/rcb")
-      val enc = s.read.parquet(s"$idxDir/codes")
-      // query probes — coarse dots recomputed for the 4 query vectors
-      // only (identical rows to the corpus-wide relation restricted
-      // to the qids: same per-vec_id groups, same window order)
-      val qprobe = coarseDots(e.where(col("vec_id").between(0, 3)))
-        .withColumn("rn", row_number().over(cw))
-        .crossJoin(broadcast(nc.select(col("np"))))
-        .where(col("rn") <= col("np"))
-        .select(col("vec_id").as("qid"), col("ccid").as("cell"))
-      // query residual PER PROBED CELL → ADC table keyed by cell
-      val qe = e.where(col("vec_id").between(0, 3))
-        .select(col("vec_id").as("qid"), col("dim"), col("sub"),
-          col("q6").as("qq6"))
-      val qres = qprobe.join(qe, "qid")
-        .join(broadcast(centR),
-          col("cell") === col("ccid") && col("dim") === col("cdim"))
-        .select(col("qid"), col("cell"), col("dim"),
-          col("sub"), (col("qq6") - col("c6")).as("rq6"))
-      val adc = qres.join(broadcast(rcb), "dim")
-        .groupBy(col("qid"), col("cell"), col("sub"), col("cw"))
-        .agg(sum((col("rq6") - col("rc6")) * (col("rq6") - col("rc6")))
-          .as("d_qc"))
-      // cell prune, then residual-ADC scan in the candidate's cell
-      val candv = assign.join(broadcast(qprobe), "cell")
-        .where(col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("cell"), col("vec_id"))
-      val scored = candv.join(enc, "vec_id")
-        .join(broadcast(adc), Seq("qid", "cell", "sub"))
-        .where(col("code") === col("cw"))
-        .groupBy(col("qid"), col("vec_id"))
-        .agg(sum(col("d_qc")).as("adc_i"))
-      val cand = scored
-        .withColumn("crank", row_number().over(
-          Window.partitionBy(col("qid"))
-            .orderBy(col("adc_i"), col("vec_id"))))
-        .where(col("crank") <= 100)
-        .select(col("qid"), col("vec_id"), col("adc_i"))
-      // exact rerank on RAW vectors (true L2, not residual space)
-      val exact = cand.join(e.select(col("vec_id"), col("dim"),
-          col("q6").as("v6")), "vec_id")
-        .join(broadcast(qe.select(col("qid"), col("dim"), col("qq6"))),
-          Seq("qid", "dim"))
-        .groupBy(col("qid"), col("vec_id"), col("adc_i"))
-        .agg(sum((col("v6") - col("qq6")) * (col("v6") - col("qq6")))
-          .as("true_i"))
-      exact
-        .withColumn("rank", row_number().over(
-          Window.partitionBy(col("qid"))
-            .orderBy(col("true_i"), col("vec_id"))).cast("long"))
-        .where(col("rank") <= 10)
-        .select(col("qid"), col("rank"), col("vec_id"),
-          r6(col("adc_i").cast("double") / lit(1e12)).as("adc_dist"),
-          r6(col("true_i").cast("double") / lit(1e12)).as("true_dist"))
-        .orderBy(col("qid"), col("rank"))
-    }),
+        "residual IVF-PQ: assign + stride-256 residual seed book " +
+          "(cw = (vec_id - c) div s) + codes, v2")(
+        buildResidualIvfpq(s, d, Nil)),
+      shortlist = lit(100L))),
 
     // HNSW-STYLE BEAM-SEARCH ANN (round-12 verdict item 9 — the
     // highest-recall ANN family): a hierarchical navigable-small-world
@@ -220,8 +64,8 @@ object Extras148 {
     //     geometric level assignment replaced by a documented
     //     deterministic proxy); the query's entry point is its exact
     //     nearest upper-layer vector (a corpus/16 scan — the
-    //     hierarchy's log-shortcut; more strided levels at larger
-    //     corpora, stated not built);
+    //     hierarchy's log-shortcut; q_llm_ann_hnsw_ml builds the
+    //     deeper strided levels);
     //   * base-layer graph = exact 8-NN within each adaptive IVF cell
     //     (per-cell quadratic bounded by occupancy — the q_graph_scc
     //     per-component contract) ∪ vec→cell-hub ∪ hub↔hub mesh
@@ -239,7 +83,7 @@ object Extras148 {
   )
 
   /** Packed-array zip_with exact L2² fold (BIGINT micro²). */
-  private def d2(a: String, b: String) = expr(
+  private[operators] def d2(a: String, b: String) = expr(
     s"""aggregate(zip_with($a, $b,
           (x, y) -> (x.q6 - y.q6) * (x.q6 - y.q6)),
           CAST(0 AS BIGINT), (s, v) -> s + v)""")
@@ -247,41 +91,260 @@ object Extras148 {
     s"""aggregate(zip_with($a, $b, (x, y) -> x.q6 * y.q6),
           CAST(0 AS BIGINT), (s, v) -> s + v)""")
 
-  /** SHARED HNSW index build (round-14 ADVICE item 1: one derivation,
-    * called by every key that reads the fixture, so the recipe cannot
-    * drift between byte-duplicated bodies).
+  /** Per-dim exact micros of an embeddings frame: (vec_id, dim, q6,
+    * sub), dim 1-based, sub = the 4-dim PQ subspace. */
+  private def quantized(emb: DataFrame): DataFrame = emb
+    .select(col("vec_id"), posexplode(col("embedding")))
+    .toDF("vec_id", "pos", "x")
+    .select(col("vec_id"), (col("pos") + 1).as("dim"),
+      (round(col("x").cast("double"), 6).cast(DecimalType(18, 6))
+        * 1000000).cast("long").as("q6"))
+    .withColumn("sub", expr("(dim - 1) div 4"))
+
+  /** The adaptive IVF cell policy, one row: nv vectors; c cells, the
+    * smallest of {8, 16, 32, 64} holding expected occupancy ≤ 64
+    * (integer thresholds only — the q_llm_ann_lsh_adaptive scale rule:
+    * fixed 8 cells at 8× corpus decayed recall@10 0.85 → 0.45); np
+    * probed cells, growing with c (2 of ≤ 16 → 4 of ≥ 32) so the
+    * probed fraction falls while staying recall-viable; s, the stride
+    * of the 256-codeword PQ seed sample outside the centroid block
+    * [0, c) — a codeword set overlapping the centroids degenerates to
+    * near-zero residuals once c widens to 64 (measured: recall@10
+    * 0.93 → 0.10 at the 8× probe before this rule). The centroids are
+    * vectors 0 .. c-1. */
+  private[operators] def cellPolicy(s: SparkSession, d: String): DataFrame =
+    Tables.embeddings(s, d).agg(count(lit(1)).as("nv"))
+      .select(col("nv"), when(col("nv") <= 512, 8L)
+        .when(col("nv") <= 1024, 16L)
+        .when(col("nv") <= 2048, 32L)
+        .otherwise(64L).as("c"))
+      .withColumn("np", when(col("c") <= 16, 2L).otherwise(4L))
+      .withColumn("s", greatest(lit(1L), expr("(nv - c) div 256")))
+
+  /** Exact BIGINT coarse dots (vec_id, ccid, cdot) of per-dim micros
+    * `v` (vec_id, dim, q6) against centroids `cent` (ccid, dim, c6). */
+  private[operators] def coarseDots(v: DataFrame, cent: DataFrame): DataFrame =
+    v.join(broadcast(cent), "dim")
+      .groupBy(col("vec_id"), col("ccid"))
+      .agg(sum(col("q6") * col("c6")).as("cdot"))
+
+  /** Coarse-cell rank order: max dot, ties to the smaller ccid. */
+  private[operators] val coarseOrder = Window.partitionBy(col("vec_id"))
+    .orderBy(col("cdot").desc, col("ccid"))
+
+  /** The per-dim centroid micros (ccid, dim, c6) of a quantized
+    * frame: vectors 0 .. c-1. */
+  private[operators] def centroidsOf(e: DataFrame, nc: DataFrame): DataFrame =
+    e.crossJoin(broadcast(nc))
+      .where(col("vec_id") < col("c"))
+      .select(col("vec_id").as("ccid"), col("dim"), col("q6").as("c6"))
+
+  /** Lloyd M-step means over the positive-shifted numerator Σ(r6+4e6)
+    * (non-negative because |r6| ≤ ~2.2e6, so both engines truncate
+    * identically): the floor mean, and the round-to-nearest mean
+    * ((S + n div 2) div n). Across TWO rounds the floor bias (−0.5
+    * micro expected per round) compounds, measured: floor-floor read
+    * recall@10 0.83 at 8× vs the 1-step book's 0.85 (BASELINE.md
+    * round-14 part 1), so the 2-step key rounds to nearest. */
+  private[operators] val FloorMean =
+    "CAST(sum(r6 + 4000000) div count(1) - 4000000 AS BIGINT)"
+  private[operators] val NearestMean =
+    "CAST((sum(r6 + 4000000) + count(1) div 2) div count(1)" +
+      " - 4000000 AS BIGINT)"
+
+  /** RESIDUAL IVF-PQ INDEX BUILD into `dest` (amortized: the corpus-
+    * sized passes persist as parquet keyed by the source snapshot, the
+    * production IVFADC deployment where the index is built once at
+    * ingest; every artifact is exact BIGINTs, so the parquet round
+    * trip is bit-identical):
+    *   - assign: (vec_id, cell), max coarse dot, ties to smaller ccid;
+    *   - book: (cw, dim, rc6), the 256 stride-sampled residuals from
+    *     outside the centroid block, numbered cw = (vec_id − c) div s,
+    *     then one exact (E, M) Lloyd round per entry of `meanSteps`
+    *     (encode the corpus residuals, move each non-empty codeword to
+    *     its members' mean, an empty codeword keeps its entry);
+    *   - codes: (vec_id, sub, code), each residual subvector's nearest
+    *     book codeword, ties to the smaller cw. */
+  private[graft] def buildResidualIvfpq(s: SparkSession, d: String,
+      meanSteps: Seq[String])(dest: String): Unit = {
+    val P = s.conf.get("spark.sql.shuffle.partitions").toInt
+    val nc = cellPolicy(s, d)
+    // fan out BEFORE checkpointing: the small parquet file scans as one
+    // partition, which would serialize the ×c coarse-dot and ×256
+    // encode expansions below onto one core
+    val e = quantized(Tables.embeddings(s, d))
+      .repartition(P, col("vec_id"))
+      .duckCkpt() // centroids, assign AND residuals
+    val cent = centroidsOf(e, nc)
+    coarseDots(e, cent).withColumn("rn", row_number().over(coarseOrder))
+      .where(col("rn") === 1)
+      .select(col("vec_id"), col("ccid").as("cell"))
+      .write.parquet(s"$dest/assign")
+    // corpus residuals r = v − centroid(cell(v)); the assignment re-reads
+    // its own just-written artifact (cent derives from e: rename its dim
+    // to dodge the ambiguous self-join lineage check)
+    val resid = e.join(s.read.parquet(s"$dest/assign"), "vec_id")
+      .join(broadcast(cent.withColumnRenamed("dim", "cdim")),
+        col("cell") === col("ccid") && col("dim") === col("cdim"))
+      .select(col("vec_id"), col("dim"), col("sub"),
+        (col("q6") - col("c6")).as("r6"))
+      .duckCkpt() // seed book, every encode, every M-step
+    val seed = resid.crossJoin(broadcast(nc.select(col("c"), col("s"))))
+      .where(col("vec_id") >= col("c")
+        && (col("vec_id") - col("c")) % col("s") === 0
+        && expr("(vec_id - c) div s") < 256)
+      .select(expr("(vec_id - c) div s").as("cw"), col("dim"),
+        col("r6").as("rc6"))
+      .duckCkpt() // first encode AND the empty-codeword fallback
+    // Packed encode: per (vector, subspace) argmin over the 256
+    // codewords. The per-dim flat join form shuffles #vec × 16 × 256
+    // grouped rows (65M at the 8× probe, measured 94 s); instead each
+    // (vec, sub) residual and each (sub, cw) codeword packs into a
+    // 4-dim array, each distance is ONE codegen'd zip_with fold, and
+    // min(struct(dist, cw)) takes the argmin tie-broken to the smallest
+    // cw, with the map-side partial agg collapsing the rows to #vec × 16
+    // before any shuffle. repartition after the tiny groupBy: AQE
+    // coalesces the 32k-row shuffle to ONE partition, putting the ×256
+    // codebook expansion on a single core (measured 16 s at sf0.1).
+    val rsub = resid.groupBy(col("vec_id"), col("sub"))
+      .agg(sort_array(collect_list(struct(col("dim"), col("r6"))))
+        .as("rv"))
+      .repartition(P, col("vec_id"))
+      .duckCkpt() // every encode
+    def encode(book: DataFrame): DataFrame = {
+      val cbSub = book
+        .withColumn("sub", expr("(dim - 1) div 4"))
+        .groupBy(col("sub"), col("cw"))
+        .agg(sort_array(collect_list(struct(col("dim"), col("rc6"))))
+          .as("cv"))
+      rsub.join(broadcast(cbSub), "sub")
+        .select(col("vec_id"), col("sub"), col("cw"), expr(
+          """aggregate(zip_with(rv, cv,
+               (a, b) -> (a.r6 - b.rc6) * (a.r6 - b.rc6)),
+               CAST(0 AS BIGINT), (s, v) -> s + v)""").as("dist"))
+        .groupBy(col("vec_id"), col("sub"))
+        .agg(min(struct(col("dist"), col("cw"))).as("m"))
+        .select(col("vec_id"), col("sub"), col("m.cw").as("code"))
+    }
+    meanSteps.foldLeft(seed) { (book, mean) =>
+      val upd = resid.join(encode(book), Seq("vec_id", "sub"))
+        .groupBy(col("code").as("cw"), col("dim"))
+        .agg(expr(mean).as("rc6t"))
+      book.join(upd, Seq("cw", "dim"), "left")
+        .select(col("cw"), col("dim"),
+          coalesce(col("rc6t"), col("rc6")).as("rc6"))
+        .duckCkpt() // next round's encode AND fallback
+    }.write.parquet(s"$dest/book")
+    encode(s.read.parquet(s"$dest/book")).write.parquet(s"$dest/codes")
+  }
+
+  /** RESIDUAL IVF-PQ SEARCH against a built index: the np best coarse
+    * cells per query vector 0..3, the query's residual PER PROBED CELL
+    * → an ADC table keyed by cell (4·np·16·256 rows, broadcast-size),
+    * the cell-pruned ADC scan of the code table, the `shortlist` best
+    * ADC candidates (a column over the policy row, e.g. nv), and the
+    * exact top-10 rerank on RAW vectors (true L2, not residual space).
     *
-    * INDEX BUILD, amortized (round-13 verdict item 1): the packed
-    * vector table and the navigable graph — whose build is the
-    * Σ occ²/cell in-cell kNN, the whole cost of a cold invocation —
-    * persist as parquet keyed by the source snapshot. The graded
-    * queries are SEARCH against the built graph (entry scan + bounded
-    * beam / best-first), the production HNSW deployment. Exact BIGINT
-    * arrays round-trip parquet bit-identically: results unchanged.
+    * The corpus expansion is checkpointed once and read three times
+    * (centroids, queries, rerank). Reading three pushed-down slivers
+    * instead (≤64 centroids, 4 queries, the shortlisted candidates, the
+    * last through a checkpointed candidate list) measured slower on a
+    * 4-core host at sf0.1: QueryProbe medians of 6 interleaved
+    * repetitions 2.57 s for the sliver path against 2.23 / 2.29 s for
+    * this one. */
+  private[graft] def searchResidualIvfpq(s: SparkSession, d: String,
+      idxDir: String, shortlist: Column): DataFrame = {
+    val P = s.conf.get("spark.sql.shuffle.partitions").toInt
+    val nc = cellPolicy(s, d)
+    val e = quantized(Tables.embeddings(s, d))
+      .repartition(P, col("vec_id")) // 1-partition expansion trap
+      .duckCkpt() // centroids, queries AND rerank
+    val cent = centroidsOf(e, nc)
+    val assign = s.read.parquet(s"$idxDir/assign")
+    val book = s.read.parquet(s"$idxDir/book")
+    val enc = s.read.parquet(s"$idxDir/codes")
+    // query coarse dots: identical rows to the corpus-wide relation
+    // restricted to the qids (same per-vec_id groups, same order)
+    val eq = e.where(col("vec_id").between(0, 3))
+    val qprobe = coarseDots(eq, cent)
+      .withColumn("rn", row_number().over(coarseOrder))
+      .crossJoin(broadcast(nc.select(col("np"))))
+      .where(col("rn") <= col("np"))
+      .select(col("vec_id").as("qid"), col("ccid").as("cell"))
+    val qe = eq.select(col("vec_id").as("qid"), col("dim"), col("sub"),
+      col("q6").as("qq6"))
+    val qres = qprobe.join(qe, "qid")
+      .join(broadcast(cent.withColumnRenamed("dim", "cdim")),
+        col("cell") === col("ccid") && col("dim") === col("cdim"))
+      .select(col("qid"), col("cell"), col("dim"), col("sub"),
+        (col("qq6") - col("c6")).as("rq6"))
+    val adc = qres.join(broadcast(book), "dim")
+      .groupBy(col("qid"), col("cell"), col("sub"), col("cw"))
+      .agg(sum((col("rq6") - col("rc6")) * (col("rq6") - col("rc6")))
+        .as("d_qc"))
+    val cand = assign.join(broadcast(qprobe), "cell")
+      .where(col("vec_id") =!= col("qid"))
+      .join(enc, "vec_id")
+      .join(broadcast(adc), Seq("qid", "cell", "sub"))
+      .where(col("code") === col("cw"))
+      .groupBy(col("qid"), col("vec_id"))
+      .agg(sum(col("d_qc")).as("adc_i"))
+      .crossJoin(broadcast(nc.select(col("nv"))))
+      .withColumn("crank", row_number().over(
+        Window.partitionBy(col("qid"))
+          .orderBy(col("adc_i"), col("vec_id"))))
+      .where(col("crank") <= shortlist)
+    cand.join(e.select(col("vec_id"), col("dim"), col("q6").as("v6")),
+        "vec_id")
+      .join(broadcast(qe.select(col("qid"), col("dim"), col("qq6"))),
+        Seq("qid", "dim"))
+      .groupBy(col("qid"), col("vec_id"), col("adc_i"))
+      .agg(sum((col("v6") - col("qq6")) * (col("v6") - col("qq6")))
+        .as("true_i"))
+      .withColumn("rank", row_number().over(
+        Window.partitionBy(col("qid"))
+          .orderBy(col("true_i"), col("vec_id"))).cast("long"))
+      .where(col("rank") <= 10)
+      .select(col("qid"), col("rank"), col("vec_id"),
+        r6(col("adc_i").cast("double") / lit(1e12)).as("adc_dist"),
+        r6(col("true_i").cast("double") / lit(1e12)).as("true_dist"))
+      .orderBy(col("qid"), col("rank"))
+  }
+
+  /** SHARED HNSW layer-0 index build (one derivation for every key
+    * that reads the fixture, so the recipe cannot drift between
+    * byte-duplicated bodies).
+    *
+    * INDEX BUILD, amortized: the packed vector table (vpack) and the
+    * navigable graph (edges), whose build is the Σ occ²/cell in-cell
+    * kNN, persist as parquet keyed by the source snapshot. The graded
+    * queries are SEARCH against the built graph. Exact BIGINT arrays
+    * round-trip parquet bit-identically.
     *
     * diversify=false → plain in-cell 8-NN edges (the round-12 graph).
     * diversify=true → the paper's Algorithm-4 heuristic neighbor
     * selection, re-expressed ORDER-FREE as the classic RNG rule so
-    * both engines state it declaratively: from a 24-candidate in-cell
-    * pool, candidate e (rank r_e by exact distance to q) is PRUNED if
-    * some closer-ranked candidate r has d²(e,r) < d²(e,q) — e is
-    * better reached THROUGH r, so the edge slot is spent on a new
-    * direction instead. Kept edges = first 8 by (pruned ASC, rank) —
-    * the paper's keepPrunedConnections backfill, so degree stays 8
-    * and the graph only gets MORE diverse, never sparser. This is
-    * what turns near-duplicate edge fans into long-range links (the
-    * round-14 8×-miss diagnosis: the lost neighbor's nearest in-link
-    * ranked 168th — reachable only through a diversified edge).
-    * Scale: the prune join adds ≤ 24·23/2 exact pair folds per node —
-    * corpus-LINEAR, charged to the ingest-time build like the rest. */
-  /** m0 = layer-0 out-degree for the DIVERSIFIED graph (the paper's
-    * M0; default M0 = M = 8 is the graded fixture). The round-15
-    * best-first 8× diagnosis was topology-bound — diversification
-    * thins the local kNN mesh and the paper's remedy is M0 = 2M, not
-    * more ef — so ScaleProbe A/Bs m0 = 16 against the graded 8
-    * (round-15 verdict item 3). The kept-edge count is the ONLY
-    * recipe difference; pool size (24) and the RNG prune rule are
-    * shared, and the salt versions the derivation. */
+    * both engines state it declaratively: from a 24-candidate pool,
+    * candidate e (rank r_e by exact distance to q) is PRUNED if some
+    * closer-ranked candidate r has d²(e,r) < d²(e,q) — e is better
+    * reached THROUGH r, so the edge slot is spent on a new direction
+    * instead. Kept edges = first m0 by (pruned ASC, rank) — the paper's
+    * keepPrunedConnections backfill, so degree stays m0 and the graph
+    * only gets MORE diverse, never sparser. This is what turns
+    * near-duplicate edge fans into long-range links (the round-14
+    * 8×-miss diagnosis: the lost neighbor's nearest in-link ranked
+    * 168th — reachable only through a diversified edge). Scale: the
+    * prune join adds ≤ 24·23/2 exact pair folds per node —
+    * corpus-LINEAR, charged to the ingest-time build like the rest.
+    *
+    * m0 = layer-0 out-degree for the DIVERSIFIED graph (the paper's M0;
+    * default M0 = M = 8 is the graded fixture). The round-15
+    * best-first 8× diagnosis was topology-bound — diversification thins
+    * the local kNN mesh and the paper's remedy is M0 = 2M, not more
+    * ef — so ScaleProbe A/Bs m0 = 16 against the graded 8. The
+    * kept-edge count is the ONLY recipe difference; pool size (24) and
+    * the RNG prune rule are shared, and the salt versions the
+    * derivation. */
   private[graft] def buildHnswIndex(s: SparkSession, d: String,
       diversify: Boolean, m0: Int = 8): String = {
     require(m0 == 8 || diversify, "m0 override is a diversified-graph probe")
@@ -304,52 +367,16 @@ object Extras148 {
       // and dot below is one codegen'd zip_with fold over these; no
       // exploded per-dim relation ever shuffles (the per-dim coarse
       // assignment alone was a 4M-row groupBy + window)
-      Tables.embeddings(s, d)
-        .select(col("vec_id"), posexplode(col("embedding")))
-        .toDF("vec_id", "pos", "x")
-        .select(col("vec_id"), (col("pos") + 1).as("dim"),
-          (round(col("x").cast("double"), 6).cast(DecimalType(18, 6))
-            * 1000000).cast("long").as("q6"))
+      quantized(Tables.embeddings(s, d))
         .groupBy(col("vec_id"))
         .agg(sort_array(collect_list(struct(col("dim"), col("q6"))))
           .as("v"))
         .repartition(P, col("vec_id"))
         .write.parquet(s"$dest/vpack")
-      val vpack0 = s.read.parquet(s"$dest/vpack").duckCkpt()
-      val nc = Tables.embeddings(s, d).agg(count(lit(1)).as("nv"))
-        .select(when(col("nv") <= 512, 8L)
-          .when(col("nv") <= 1024, 16L)
-          .when(col("nv") <= 2048, 32L)
-          .otherwise(64L).as("c"))
-      val centArr = vpack0.crossJoin(broadcast(nc))
-        .where(col("vec_id") < col("c"))
-        .select(col("vec_id").as("ccid"), col("v").as("cv"))
-      // coarse assignment: max dot, ties to the SMALLER ccid (the
-      // ivfpq row_number(cdot DESC, ccid) order) via max(struct) on
-      // (cdot, -ccid)
-      val assign = vpack0.crossJoin(broadcast(centArr))
-        .select(col("vec_id"), col("ccid"), dot("v", "cv").as("cdot"))
-        .groupBy(col("vec_id"))
-        .agg(max(struct(col("cdot"), (-col("ccid")).as("nid")))
-          .as("m"))
-        .select(col("vec_id"), (-col("m.nid")).as("cell"))
-      val vpack = vpack0.join(assign, "vec_id")
+      val vpack = withCells(s, d, s.read.parquet(s"$dest/vpack").duckCkpt())
         .duckCkpt()
-      // base-layer graph
-      val vp1 = vpack.select(col("vec_id").as("src"), col("cell"),
-        col("v").as("va"))
-      val vp2 = vpack.select(col("vec_id").as("dst"),
-        col("cell").as("cell2"), col("v").as("vb"))
       val knn =
-        if (!diversify)
-          vp1.join(vp2, col("cell") === col("cell2")
-              && col("src") =!= col("dst"))
-            .select(col("src"), col("dst"), d2("va", "vb").as("dd"))
-            .withColumn("rn", row_number().over(
-              Window.partitionBy(col("src"))
-                .orderBy(col("dd"), col("dst"))))
-            .where(col("rn") <= 8)
-            .select(col("src"), col("dst"))
+        if (!diversify) inCellKnn(vpack, 8)
         else {
           // Alg.4/RNG heuristic selection over a 24-NN pool drawn from
           // the node's OWN cell PLUS its 3 nearest neighbor cells (the
@@ -362,6 +389,7 @@ object Extras148 {
           // cost: 4·occ candidates per node, still corpus-linear and
           // ingest-charged. Pool referenced three times below → one
           // checkpoint (shared-subtree rule).
+          val centArr = centroidVectors(s, d, vpack)
           val cn = centArr.crossJoin(broadcast(centArr
               .select(col("ccid").as("c2"), col("cv").as("cv2"))))
             .select(col("ccid").as("cell"), col("c2"),
@@ -371,9 +399,12 @@ object Extras148 {
                 .orderBy(col("cd"), col("c2"))))
             .where(col("rn") <= 4)
             .select(col("cell"), col("c2"))
-          val pool = vp1.join(broadcast(cn), "cell")
-            .join(vp2, col("c2") === col("cell2")
-              && col("src") =!= col("dst"))
+          val pool = vpack.select(col("vec_id").as("src"), col("cell"),
+              col("v").as("va"))
+            .join(broadcast(cn), "cell")
+            .join(vpack.select(col("vec_id").as("dst"),
+                col("cell").as("cell2"), col("v").as("vb")),
+              col("c2") === col("cell2") && col("src") =!= col("dst"))
             .select(col("src"), col("dst"), d2("va", "vb").as("dd"),
               col("vb"))
             .withColumn("rn", row_number().over(
@@ -395,88 +426,131 @@ object Extras148 {
             .where(col("rn2") <= m0)
             .select(col("src"), col("dst"))
         }
-      val hub = assign.groupBy(col("cell"))
-        .agg(min(col("vec_id")).as("h"))
-      val toHub = assign.join(hub, "cell")
-        .where(col("vec_id") =!= col("h"))
-        .select(col("vec_id").as("src"), col("h").as("dst"))
-      val h1 = hub.select(col("h").as("src"))
-      val h2 = hub.select(col("h").as("dst"))
-      val mesh = h1.crossJoin(h2).where(col("src") =!= col("dst"))
-      knn.unionByName(toHub).unionByName(mesh)
-        .distinct()
-        .write.parquet(s"$dest/edges")
+      cellGraph(vpack, knn).write.parquet(s"$dest/edges")
     }
   }
 
+  /** The packed centroid vectors (ccid, cv): vectors 0 .. c-1. */
+  private def centroidVectors(s: SparkSession, d: String,
+      vpack: DataFrame): DataFrame =
+    vpack.crossJoin(broadcast(cellPolicy(s, d)))
+      .where(col("vec_id") < col("c"))
+      .select(col("vec_id").as("ccid"), col("v").as("cv"))
+
+  /** Packed vectors (vec_id, v) plus their coarse cell: max dot, ties
+    * to the SMALLER ccid (the residual build's coarseOrder) via
+    * max(struct) on (cdot, -ccid). */
+  private[operators] def withCells(s: SparkSession, d: String,
+      vpack: DataFrame): DataFrame = {
+    val assign = vpack.crossJoin(broadcast(centroidVectors(s, d, vpack)))
+      .select(col("vec_id"), col("ccid"), dot("v", "cv").as("cdot"))
+      .groupBy(col("vec_id"))
+      .agg(max(struct(col("cdot"), (-col("ccid")).as("nid"))).as("m"))
+      .select(col("vec_id"), (-col("m.nid")).as("cell"))
+    vpack.join(assign, "vec_id")
+  }
+
+  /** Exact in-cell k-NN edges (src, dst) of celled vectors (vec_id,
+    * cell, v): per-cell quadratic, ties on dst. */
+  private[operators] def inCellKnn(vp: DataFrame, k: Int): DataFrame =
+    vp.select(col("vec_id").as("src"), col("cell"), col("v").as("va"))
+      .join(vp.select(col("vec_id").as("dst"), col("cell").as("cell2"),
+          col("v").as("vb")),
+        col("cell") === col("cell2") && col("src") =!= col("dst"))
+      .select(col("src"), col("dst"), d2("va", "vb").as("dd"))
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(col("src")).orderBy(col("dd"), col("dst"))))
+      .where(col("rn") <= k)
+      .select(col("src"), col("dst"))
+
+  /** A navigable layer over celled vectors (vec_id, cell, v): the
+    * `knn` edges ∪ vec → its cell's hub (the cell's smallest vec_id) ∪
+    * the hub↔hub mesh (≤ c² long-range links, the cross-cell
+    * navigability), deduplicated. */
+  private[operators] def cellGraph(vp: DataFrame, knn: DataFrame): DataFrame = {
+    val hub = vp.groupBy(col("cell")).agg(min(col("vec_id")).as("h"))
+    val toHub = vp.select(col("vec_id"), col("cell")).join(hub, "cell")
+      .where(col("vec_id") =!= col("h"))
+      .select(col("vec_id").as("src"), col("h").as("dst"))
+    val mesh = hub.select(col("h").as("src"))
+      .crossJoin(hub.select(col("h").as("dst")))
+      .where(col("src") =!= col("dst"))
+    knn.unionByName(toHub).unionByName(mesh).distinct()
+  }
+
+  /** Exact distances (qid, vec_id, dd) of candidate (qid, vec_id) rows
+    * to their query, over packed vectors and query rows (qid, qv). */
+  private[operators] def rescore(cand: DataFrame, vpack: DataFrame,
+      qp: DataFrame): DataFrame = cand
+    .join(vpack.select(col("vec_id"), col("v").as("vb")), "vec_id")
+    .join(broadcast(qp), "qid")
+    .select(col("qid"), col("vec_id"), d2("qv", "vb").as("dd"))
+
+  /** Each query's exact nearest vec_id % 16 == 0 node (qid, vec_id, dd):
+    * the single-upper-layer entry point. */
+  private[operators] def strideEntry(vpack: DataFrame,
+      qp: DataFrame): DataFrame =
+    qp.crossJoin(vpack.where(col("vec_id") % 16 === 0)
+        .select(col("vec_id").as("cand"), col("v").as("vb")))
+      .select(col("qid"), col("cand").as("vec_id"), d2("qv", "vb").as("dd"))
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(col("qid")).orderBy(col("dd"), col("vec_id"))))
+      .where(col("rn") === 1)
+      .select(col("qid"), col("vec_id"), col("dd"))
+
   /** SHARED beam-16 layer-0 search over a built HNSW fixture — the
     * batched production variant (best-first is the paper-parity study
-    * in Extras160). rounds=5 is the graded spec on BOTH engines; the
-    * parameter exists for ScaleProbe's budget-vs-edge-bound recall
-    * probe only. */
-  private[graft] def hnswBeamSearch(s: SparkSession,
-      idxDir: String, rounds: Int = 5): DataFrame = {
+    * in Extras160). `entry(vpack, qp)` gives each query's start node
+    * (qid, vec_id, dd); `rounds` beam rounds follow. q_llm_ann_hnsw and
+    * q_llm_ann_hnsw_div run 5 rounds from `strideEntry`;
+    * q_llm_ann_hnsw_ml runs 4 from its upper-layer descent; ScaleProbe
+    * varies `rounds` for its budget-vs-edge-bound recall probe. */
+  private[graft] def hnswBeamSearch(s: SparkSession, idxDir: String,
+      rounds: Int = 5,
+      entry: (DataFrame, DataFrame) => DataFrame = strideEntry)
+      : DataFrame = {
     val P = s.conf.get("spark.sql.shuffle.partitions").toInt
-    // SEARCH: read the built index; both relations are re-joined
-    // every beam round, so one checkpoint each (shared-subtree rule)
+    // SEARCH: read the built index; both relations are re-joined every
+    // beam round, so one checkpoint each (shared-subtree rule)
     val vpack = s.read.parquet(s"$idxDir/vpack").duckCkpt()
-      val edges = s.read.parquet(s"$idxDir/edges")
-        .repartition(P, col("src"))
+    val edges = s.read.parquet(s"$idxDir/edges")
+      .repartition(P, col("src"))
+      .duckCkpt()
+    val qp = vpack.where(col("vec_id").between(0, 3))
+      .select(col("vec_id").as("qid"), col("v").as("qv"))
+      .duckCkpt()
+    // beam rounds: ONE state relation (qid, vec_id, dd, exp) and ONE
+    // checkpoint per round (all rows ≤ 4·(B·9·rounds) — the
+    // densest-subgraph driver-loop convention; the three-relation
+    // best/visited/frontier form cost 3 checkpoint actions per round,
+    // ~2× the wall-clock, same semantics)
+    val bw = Window.partitionBy(col("qid"))
+      .orderBy(col("dd"), col("vec_id"))
+    var state = entry(vpack, qp).withColumn("exp", lit(false)).duckCkpt()
+    for (_ <- 1 to rounds) {
+      // frontier = the 16 best not-yet-expanded per query
+      val front = state.where(!col("exp"))
+        .withColumn("rn", row_number().over(bw))
+        .where(col("rn") <= 16)
+        .select(col("qid"), col("vec_id"))
+      val cand = front.join(edges, front("vec_id") === edges("src"))
+        .select(col("qid"), col("dst").as("vec_id")).distinct()
+        .join(state.select(col("qid"), col("vec_id")),
+          Seq("qid", "vec_id"), "left_anti")
+      state = state
+        .join(front.withColumn("f", lit(true)),
+          Seq("qid", "vec_id"), "left")
+        .select(col("qid"), col("vec_id"), col("dd"),
+          (col("exp") || coalesce(col("f"), lit(false))).as("exp"))
+        .unionByName(rescore(cand, vpack, qp).withColumn("exp", lit(false)))
         .duckCkpt()
-      // queries + upper-layer entry points
-      val qp = vpack.where(col("vec_id").between(0, 3))
-        .select(col("vec_id").as("qid"), col("v").as("qv"))
-        .duckCkpt()
-      val upper = vpack.where(col("vec_id") % 16 === 0)
-        .select(col("vec_id").as("cand"), col("v").as("vb"))
-      val entry = qp.crossJoin(upper)
-        .select(col("qid"), col("cand"), d2("qv", "vb").as("dd"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy(col("qid"))
-            .orderBy(col("dd"), col("cand"))))
-        .where(col("rn") === 1)
-        .select(col("qid"), col("cand").as("vec_id"), col("dd"))
-      // beam rounds: ONE state relation (qid, vec_id, dd, exp) and
-      // ONE checkpoint per round (all rows ≤ 4·(B·9·rounds) — the
-      // densest-subgraph driver-loop convention; the three-relation
-      // best/visited/frontier form cost 3 checkpoint actions per
-      // round, ~2× the wall-clock, same semantics)
-      val bw = Window.partitionBy(col("qid"))
-        .orderBy(col("dd"), col("vec_id"))
-      var state = entry.withColumn("exp", lit(false)).duckCkpt()
-      for (_ <- 1 to rounds) {
-        // frontier = the 16 best not-yet-expanded per query
-        val front = state.where(!col("exp"))
-          .withColumn("rn", row_number().over(bw))
-          .where(col("rn") <= 16)
-          .select(col("qid"), col("vec_id"))
-        val cand = front.join(edges,
-            front("vec_id") === edges("src"))
-          .select(col("qid"), col("dst").as("vec_id")).distinct()
-          .join(state.select(col("qid"), col("vec_id")),
-            Seq("qid", "vec_id"), "left_anti")
-        val scored = cand
-          .join(vpack.select(col("vec_id"), col("v").as("vb")),
-            "vec_id")
-          .join(broadcast(qp), "qid")
-          .select(col("qid"), col("vec_id"), d2("qv", "vb").as("dd"),
-            lit(false).as("exp"))
-        state = state
-          .join(front.withColumn("f", lit(true)),
-            Seq("qid", "vec_id"), "left")
-          .select(col("qid"), col("vec_id"), col("dd"),
-            (col("exp") || coalesce(col("f"), lit(false))).as("exp"))
-          .unionByName(scored)
-          .duckCkpt()
-      }
-      state.where(col("vec_id") =!= col("qid"))
-        .withColumn("rank", row_number().over(
-          Window.partitionBy(col("qid"))
-            .orderBy(col("dd"), col("vec_id"))).cast("long"))
-        .where(col("rank") <= 10)
-        .select(col("qid"), col("rank"), col("vec_id"),
-          r6(col("dd").cast("double") / lit(1e12)).as("dist"))
-        .orderBy(col("qid"), col("rank"))
+    }
+    state.where(col("vec_id") =!= col("qid"))
+      .withColumn("rank", row_number().over(bw).cast("long"))
+      .where(col("rank") <= 10)
+      .select(col("qid"), col("rank"), col("vec_id"),
+        r6(col("dd").cast("double") / lit(1e12)).as("dist"))
+      .orderBy(col("qid"), col("rank"))
   }
 
   val oracle: Map[String, String] = Map(

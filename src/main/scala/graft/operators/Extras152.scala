@@ -1,30 +1,26 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
-import graft.{FixtureCache, Tables}
+import graft.FixtureCache
 
-/** Round-13 additions, part 6: the two §8.0-r13 round-14 starting
-  * points, landed early —
-  *   (a) residual IVF-PQ with a TRAINED codebook (one exact Lloyd
-  *       update over the stride seed — the remaining gap to
-  *       production IVFADC);
-  *   (b) HNSW with a MULTI-LEVEL entry descent (greedy 1-at-a-time on
-  *       the upper strided layers, exactly the paper's ef=1 upper
-  *       search; the batched beam stays at layer 0 where the paper
-  *       itself uses ef>1).
-  *
-  * Scale shape: both inherit the Extras148 skeletons — corpus-linear
-  * coarse assignment / encode against broadcast codebooks, cell-pruned
-  * candidate scans, bounded reranks. The Lloyd update adds one
-  * corpus-sized groupBy (members → per-codeword mean) and one repeat
-  * of the packed encode; the multi-level descent adds three
-  * 4-row-driver greedy hops over an L1 graph whose build is
-  * (nv/16)²/cell — quadratic only within strided-and-cell-bounded
-  * blocks.
+/** Round-13 additions, part 6: two users of the Extras148 ANN kernel —
+  *   (a) q_llm_ann_ivfpq_lloyd: residual IVF-PQ whose stride seed book
+  *       is TRAINED by one exact Lloyd step (E-step encode, floor-mean
+  *       M-step; empty codewords keep the seed) — the remaining gap to
+  *       production IVFADC. Build and search are the shared kernel;
+  *       this key passes only its fixture, its training step and the
+  *       fixed 100-candidate shortlist.
+  *   (b) q_llm_ann_hnsw_ml: HNSW with a MULTI-LEVEL entry descent. L2
+  *       = vec_id % 256 == 0 (L2 ⊆ L1 because 16 | 256 — the
+  *       nested-stride analog of HNSW's geometric level nesting), L1 =
+  *       vec_id % 16 == 0. Entry = exact nearest L2 node (corpus/256
+  *       scan), then THREE greedy 1-at-a-time hops over the L1 graph
+  *       (the paper's ef=1 upper-layer search, one expansion per hop),
+  *       then 4 rounds of the shared beam-16 layer-0 search over the
+  *       q_llm_ann_hnsw fixture. The L1 graph is the shared cell graph
+  *       builder at k = 4 over the stride-16 nodes.
   *
   * Determinism contract (SURVEY §2.13): all distances are exact BIGINT
   * micro² zip-folds; the Lloyd mean is an exact positive-shifted floor
@@ -34,376 +30,59 @@ import graft.{FixtureCache, Tables}
   * are ONE IEEE division + r6 on both engines.
   */
 object Extras152 {
-  import graft.Det._
+  import Extras148.{d2, rescore}
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
-    // RESIDUAL IVF-PQ + 1-step Lloyd-TRAINED codebook: seed = the
-    // Extras148 stride sample; assign all corpus residuals to the
-    // seed (packed argmin encode); update each codeword to the exact
-    // floor-mean of its members (empty codewords keep the seed);
-    // re-encode + ADC against the trained book; exact top-10 rerank.
-    "q_llm_ann_ivfpq_lloyd" -> ((s, d) => {
-      val P = s.conf.get("spark.sql.shuffle.partitions").toInt
-      // Round 17 (verdict item 2): the SEARCH path used to eagerly
-      // materialize the WHOLE corpus expansion (posexplode + repartition
-      // + checkpoint = 3 corpus-sized jobs per sample) although search
-      // reads only three slivers of it — the ≤64 centroid vectors, the 4
-      // query vectors, and the ≤100·4 rerank candidates. The shared-
-      // subtree checkpoint moves INSIDE the index build lambda (where
-      // the full expansion genuinely fans out into assign/seed/encode);
-      // the timed path re-derives each sliver from the parquet scan with
-      // the vec_id filter PUSHED to the scan instead.
-      def expl(src: org.apache.spark.sql.DataFrame) = src
-        .select(col("vec_id"), posexplode(col("embedding")))
-        .toDF("vec_id", "pos", "x")
-        .select(col("vec_id"), (col("pos") + 1).as("dim"),
-          (round(col("x").cast("double"), 6).cast(DecimalType(18, 6))
-            * 1000000).cast("long").as("q6"))
-        .withColumn("sub", expr("(dim - 1) div 4"))
-      val nc = Tables.embeddings(s, d).agg(count(lit(1)).as("nv"))
-        .select(col("nv"), when(col("nv") <= 512, 8L)
-          .when(col("nv") <= 1024, 16L)
-          .when(col("nv") <= 2048, 32L)
-          .otherwise(64L).as("c"))
-        .withColumn("np", when(col("c") <= 16, 2L).otherwise(4L))
-        .withColumn("s", greatest(lit(1L), expr("(nv - c) div 256")))
-      // c ≤ 64 by construction, so the static vec_id < 64 pre-filter (a
-      // parquet PushedFilter) is a superset of the data-dependent
-      // vec_id < c cut — identical rows out, corpus scan avoided.
-      val cent = expl(Tables.embeddings(s, d).where(col("vec_id") < 64))
-        .crossJoin(broadcast(nc))
-        .where(col("vec_id") < col("c"))
-        .select(col("vec_id").as("ccid"), col("dim"), col("q6").as("c6"))
-      val cw0 = Window.partitionBy(col("vec_id"))
-        .orderBy(col("cdot").desc, col("ccid"))
-      def coarseDots(v: DataFrame): DataFrame =
-        v.join(broadcast(cent), "dim")
-          .groupBy(col("vec_id"), col("ccid"))
-          .agg(sum(col("q6") * col("c6")).as("cdot"))
-      val centR = cent.withColumnRenamed("dim", "cdim")
-      // INDEX BUILD, amortized (round-13 verdict item 1): the coarse
-      // assignment, the Lloyd-TRAINED residual codebook (seed sample,
-      // E-step encode, exact-integer M-step) and the final code table
-      // — two full packed encodes, the whole 9 s-class warm kernel —
-      // persist as parquet keyed by the source snapshot. The graded
-      // query is SEARCH against the trained index (the production
-      // IVFADC deployment: train + encode once at ingest). Exact
-      // BIGINT artifacts round-trip parquet bit-identically: results
-      // unchanged.
-      val idxDir = FixtureCache.ensure("ann_ivfpq_lloyd_idx",
+    "q_llm_ann_ivfpq_lloyd" -> ((s, d) => Extras148.searchResidualIvfpq(
+      s, d,
+      FixtureCache.ensure("ann_ivfpq_lloyd_idx",
         Seq(s"$d/embeddings.parquet"),
-        "residual IVF-PQ: assign + 1-step-Lloyd codebook + codes, " +
-          "v1") { dest =>
-        // the build is where the corpus expansion genuinely fans out
-        // (assign, seed book, both encodes, Lloyd update) — the shared-
-        // subtree checkpoint lives HERE, charged to the ingest build
-        val e = expl(Tables.embeddings(s, d))
-          .repartition(P, col("vec_id")) // 1-partition expansion trap
-          .duckCkpt()
-        coarseDots(e).withColumn("rn", row_number().over(cw0))
-          .where(col("rn") === 1)
-          .select(col("vec_id"), col("ccid").as("cell"))
-          .write.parquet(s"$dest/assign")
-        val assignB = s.read.parquet(s"$dest/assign")
-        val resid = e.join(assignB, "vec_id")
-          .join(broadcast(centR),
-            col("cell") === col("ccid") && col("dim") === col("cdim"))
-          .select(col("vec_id"), col("dim"), col("sub"),
-            (col("q6") - col("c6")).as("r6"))
-          .duckCkpt() // seed book, BOTH encodes, Lloyd update
-        // seed codebook: 256 stride-sampled residuals outside the
-        // centroid block (the Extras148 non-overlap rule)
-        val rcb0 = resid
-          .crossJoin(broadcast(nc.select(col("c"), col("s"))))
-          .where(col("vec_id") >= col("c")
-            && (col("vec_id") - col("c")) % col("s") === 0
-            && expr("(vec_id - c) div s") < 256)
-          .select(expr("(vec_id - c) div s").as("cw"), col("dim"),
-            col("r6").as("rc6"))
-          .duckCkpt() // assign-encode AND the empty-cw fallback
-        // packed per-(vec, sub) residuals — computed ONCE, reused by
-        // both encodes (the dominant corpus-sized relation)
-        val rsub = resid.groupBy(col("vec_id"), col("sub"))
-          .agg(sort_array(collect_list(struct(col("dim"), col("r6"))))
-            .as("rv"))
-          .repartition(P, col("vec_id")) // AQE would coalesce to 1
-          .duckCkpt()
-        def encodeAgainst(book: DataFrame): DataFrame = {
-          val cbSub = book
-            .withColumn("sub", expr("(dim - 1) div 4"))
-            .groupBy(col("sub"), col("cw"))
-            .agg(sort_array(collect_list(struct(col("dim"),
-              col("rc6")))).as("cv"))
-          rsub.join(broadcast(cbSub), "sub")
-            .select(col("vec_id"), col("sub"), col("cw"), expr(
-              """aggregate(zip_with(rv, cv,
-                   (a, b) -> (a.r6 - b.rc6) * (a.r6 - b.rc6)),
-                   CAST(0 AS BIGINT), (s, v) -> s + v)""").as("dist"))
-            .groupBy(col("vec_id"), col("sub"))
-            .agg(min(struct(col("dist"), col("cw"))).as("m"))
-            .select(col("vec_id"), col("sub"), col("m.cw").as("code"))
-        }
-        // Lloyd E-step on the seed, then the exact-integer M-step:
-        // positive-shifted floor mean (both engines truncate
-        // identically on a non-negative numerator; |r6| ≤ ~2.2e6 <<
-        // the 4e6 shift)
-        val enc0 = encodeAgainst(rcb0)
-        val upd = resid.join(enc0, Seq("vec_id", "sub"))
-          .groupBy(col("code").as("cw"), col("dim"))
-          .agg(expr(
-            "CAST(sum(r6 + 4000000) div count(1) - 4000000 AS BIGINT)")
-            .as("rc6t"))
-        rcb0.join(upd, Seq("cw", "dim"), "left")
-          .select(col("cw"), col("dim"),
-            coalesce(col("rc6t"), col("rc6")).as("rc6"))
-          .write.parquet(s"$dest/rcb1")
-        encodeAgainst(s.read.parquet(s"$dest/rcb1"))
-          .write.parquet(s"$dest/codes")
-      }
-      val assign = s.read.parquet(s"$idxDir/assign")
-      val rcb1 = s.read.parquet(s"$idxDir/rcb1")
-      val enc = s.read.parquet(s"$idxDir/codes")
-      // query probes — coarse dots recomputed for the 4 query vectors
-      // only (identical rows to the corpus-wide relation restricted
-      // to the qids)
-      val eq = expl(Tables.embeddings(s, d)
-        .where(col("vec_id").between(0, 3))) // pushed to the scan
-      val qprobe = coarseDots(eq)
-        .withColumn("rn", row_number().over(cw0))
-        .crossJoin(broadcast(nc.select(col("np"))))
-        .where(col("rn") <= col("np"))
-        .select(col("vec_id").as("qid"), col("ccid").as("cell"))
-      // query residual per probed cell → ADC vs the TRAINED book
-      val qe = eq
-        .select(col("vec_id").as("qid"), col("dim"), col("sub"),
-          col("q6").as("qq6"))
-      val qres = qprobe.join(qe, "qid")
-        .join(broadcast(centR),
-          col("cell") === col("ccid") && col("dim") === col("cdim"))
-        .select(col("qid"), col("cell"), col("dim"), col("sub"),
-          (col("qq6") - col("c6")).as("rq6"))
-      val adc = qres.join(broadcast(rcb1), "dim")
-        .groupBy(col("qid"), col("cell"), col("sub"), col("cw"))
-        .agg(sum((col("rq6") - col("rc6")) * (col("rq6") - col("rc6")))
-          .as("d_qc"))
-      val candv = assign.join(broadcast(qprobe), "cell")
-        .where(col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("cell"), col("vec_id"))
-      val scored = candv.join(enc, "vec_id")
-        .join(broadcast(adc), Seq("qid", "cell", "sub"))
-        .where(col("code") === col("cw"))
-        .groupBy(col("qid"), col("vec_id"))
-        .agg(sum(col("d_qc")).as("adc_i"))
-      val cand = scored
-        .withColumn("crank", row_number().over(
-          Window.partitionBy(col("qid"))
-            .orderBy(col("adc_i"), col("vec_id"))))
-        .where(col("crank") <= 100)
-        .select(col("qid"), col("vec_id"), col("adc_i"))
-        .duckCkpt() // ≤400 rows, read twice (id filter + rerank join)
-      // rerank sliver: drop non-candidates BEFORE the explode — a
-      // broadcast semi-join of ≤400 ids against the 1-file scan replaces
-      // the corpus-wide expansion the old shared checkpoint paid
-      val eCand = expl(Tables.embeddings(s, d)
-        .join(broadcast(cand.select(col("vec_id")).distinct()), "vec_id"))
-      val exact = cand.join(eCand.select(col("vec_id"), col("dim"),
-          col("q6").as("v6")), "vec_id")
-        .join(broadcast(qe.select(col("qid"), col("dim"), col("qq6"))),
-          Seq("qid", "dim"))
-        .groupBy(col("qid"), col("vec_id"), col("adc_i"))
-        .agg(sum((col("v6") - col("qq6")) * (col("v6") - col("qq6")))
-          .as("true_i"))
-      exact
-        .withColumn("rank", row_number().over(
-          Window.partitionBy(col("qid"))
-            .orderBy(col("true_i"), col("vec_id"))).cast("long"))
-        .where(col("rank") <= 10)
-        .select(col("qid"), col("rank"), col("vec_id"),
-          r6(col("adc_i").cast("double") / lit(1e12)).as("adc_dist"),
-          r6(col("true_i").cast("double") / lit(1e12)).as("true_dist"))
-        .orderBy(col("qid"), col("rank"))
-    }),
+        "residual IVF-PQ: assign + 1-step-Lloyd (floor-mean) book + " +
+          "codes, v2")(
+        Extras148.buildResidualIvfpq(s, d, Seq(Extras148.FloorMean))),
+      shortlist = lit(100L))),
 
-    // HNSW MULTI-LEVEL: L2 = vec_id % 256 == 0 (L2 ⊆ L1 because
-    // 16 | 256 — the nested-stride analog of HNSW's geometric level
-    // nesting), L1 = vec_id % 16 == 0. Entry = exact nearest L2 node
-    // (corpus/256 scan); then THREE greedy 1-at-a-time hops over an
-    // L1 graph (per-cell 4-NN among L1 nodes ∪ L1-hub links — the
-    // paper's ef=1 upper-layer search, literally one expansion per
-    // hop); then the 4-round beam-16 layer-0 search over the
-    // Extras148 base graph.
     "q_llm_ann_hnsw_ml" -> ((s, d) => {
-      val P = s.conf.get("spark.sql.shuffle.partitions").toInt
-      def d2(a: String, b: String) = expr(
-        s"""aggregate(zip_with($a, $b,
-              (x, y) -> (x.q6 - y.q6) * (x.q6 - y.q6)),
-              CAST(0 AS BIGINT), (s, v) -> s + v)""")
-      def dot(a: String, b: String) = expr(
-        s"""aggregate(zip_with($a, $b, (x, y) -> x.q6 * y.q6),
-              CAST(0 AS BIGINT), (s, v) -> s + v)""")
-      // INDEX BUILD, amortized (round-13 verdict item 1): the packed
-      // vector table, the layer-0 graph and the L1 graph — both
-      // Σ occ²-within-(strided-)cells kNN builds, the whole warm cost
-      // of a cold invocation — persist as parquet keyed by the source
-      // snapshot. The graded query is SEARCH (L2 entry scan + 3
-      // greedy hops + bounded beam), the production HNSW deployment.
-      // Exact BIGINT arrays round-trip parquet bit-identically:
-      // results unchanged.
+      val l0 = Extras148.buildHnswIndex(s, d, diversify = false)
+      // INDEX BUILD, amortized: the L1 graph over the layer-0 fixture's
+      // packed vectors (per-cell 4-NN among the stride-16 nodes ∪ each
+      // L1 node → its cell's L1 hub ∪ hub mesh, for hops that must
+      // cross cells) persists as parquet keyed by the source snapshot
       val idxDir = FixtureCache.ensure("ann_hnsw_ml_idx",
         Seq(s"$d/embeddings.parquet"),
-        "packed micro vectors + L0 8-NN/hub/mesh + L1 4-NN/hub/mesh " +
-          "edge lists, v1") { dest =>
-        Tables.embeddings(s, d)
-          .select(col("vec_id"), posexplode(col("embedding")))
-          .toDF("vec_id", "pos", "x")
-          .select(col("vec_id"), (col("pos") + 1).as("dim"),
-            (round(col("x").cast("double"), 6).cast(DecimalType(18, 6))
-              * 1000000).cast("long").as("q6"))
-          .groupBy(col("vec_id"))
-          .agg(sort_array(collect_list(struct(col("dim"), col("q6"))))
-            .as("v"))
-          .repartition(P, col("vec_id"))
-          .write.parquet(s"$dest/vpack")
-        val vpack0 = s.read.parquet(s"$dest/vpack").duckCkpt()
-        val nc = Tables.embeddings(s, d).agg(count(lit(1)).as("nv"))
-          .select(when(col("nv") <= 512, 8L)
-            .when(col("nv") <= 1024, 16L)
-            .when(col("nv") <= 2048, 32L)
-            .otherwise(64L).as("c"))
-        val centArr = vpack0.crossJoin(broadcast(nc))
-          .where(col("vec_id") < col("c"))
-          .select(col("vec_id").as("ccid"), col("v").as("cv"))
-        val assign = vpack0.crossJoin(broadcast(centArr))
-          .select(col("vec_id"), col("ccid"), dot("v", "cv").as("cdot"))
-          .groupBy(col("vec_id"))
-          .agg(max(struct(col("cdot"), (-col("ccid")).as("nid")))
-            .as("m"))
-          .select(col("vec_id"), (-col("m.nid")).as("cell"))
-        val vpack = vpack0.join(assign, "vec_id").duckCkpt()
-        // layer-0 graph (the Extras148 base build)
-        val vp1 = vpack.select(col("vec_id").as("src"), col("cell"),
-          col("v").as("va"))
-        val vp2 = vpack.select(col("vec_id").as("dst"),
-          col("cell").as("cell2"), col("v").as("vb"))
-        val knn = vp1.join(vp2, col("cell") === col("cell2")
-            && col("src") =!= col("dst"))
-          .select(col("src"), col("dst"), d2("va", "vb").as("dd"))
-          .withColumn("rn", row_number().over(
-            Window.partitionBy(col("src"))
-              .orderBy(col("dd"), col("dst"))))
-          .where(col("rn") <= 8)
-          .select(col("src"), col("dst"))
-        val hub = assign.groupBy(col("cell"))
-          .agg(min(col("vec_id")).as("h"))
-        val toHub = assign.join(hub, "cell")
-          .where(col("vec_id") =!= col("h"))
-          .select(col("vec_id").as("src"), col("h").as("dst"))
-        val mesh = hub.select(col("h").as("src"))
-          .crossJoin(hub.select(col("h").as("dst")))
-          .where(col("src") =!= col("dst"))
-        knn.unionByName(toHub).unionByName(mesh)
-          .distinct()
-          .write.parquet(s"$dest/edges")
-        // L1 graph: per-cell 4-NN among the stride-16 nodes ∪ each L1
-        // node ↔ its cell's L1 hub ∪ hub mesh (navigability when a
-        // hop must cross cells)
-        val l1 = vpack.where(col("vec_id") % 16 === 0)
-        val l1a = l1.select(col("vec_id").as("src"), col("cell"),
-          col("v").as("va"))
-        val l1b = l1.select(col("vec_id").as("dst"),
-          col("cell").as("cell2"), col("v").as("vb"))
-        val knn1 = l1a.join(l1b, col("cell") === col("cell2")
-            && col("src") =!= col("dst"))
-          .select(col("src"), col("dst"), d2("va", "vb").as("dd"))
-          .withColumn("rn", row_number().over(
-            Window.partitionBy(col("src"))
-              .orderBy(col("dd"), col("dst"))))
-          .where(col("rn") <= 4)
-          .select(col("src"), col("dst"))
-        val hub1 = l1.groupBy(col("cell"))
-          .agg(min(col("vec_id")).as("h"))
-        val toHub1 = l1.select(col("vec_id"), col("cell"))
-          .join(hub1, "cell")
-          .where(col("vec_id") =!= col("h"))
-          .select(col("vec_id").as("src"), col("h").as("dst"))
-        val mesh1 = hub1.select(col("h").as("src"))
-          .crossJoin(hub1.select(col("h").as("dst")))
-          .where(col("src") =!= col("dst"))
-        knn1.unionByName(toHub1).unionByName(mesh1)
-          .distinct()
+        "L1 4-NN/hub/mesh edge list over the ann_hnsw_idx packed " +
+          "vectors, v2") { dest =>
+        val l1 = Extras148.withCells(s, d, s.read.parquet(s"$l0/vpack"))
+          .where(col("vec_id") % 16 === 0)
+          .duckCkpt() // both kNN sides, hubs, hub links
+        Extras148.cellGraph(l1, Extras148.inCellKnn(l1, 4))
           .write.parquet(s"$dest/edges1")
       }
-      // SEARCH: read the built index; vpack and the L0 edges are
-      // re-joined every beam round → one checkpoint each; the L1
-      // edges feed the 3 greedy hops
-      val vpack = s.read.parquet(s"$idxDir/vpack").duckCkpt()
-      val edges = s.read.parquet(s"$idxDir/edges")
-        .repartition(P, col("src"))
-        .duckCkpt()
       val edges1 = s.read.parquet(s"$idxDir/edges1").duckCkpt()
-      val qp = vpack.where(col("vec_id").between(0, 3))
-        .select(col("vec_id").as("qid"), col("v").as("qv"))
-        .duckCkpt()
-      // L2 entry: exact nearest stride-256 node per query
-      val upper2 = vpack.where(col("vec_id") % 256 === 0)
-        .select(col("vec_id").as("cand"), col("v").as("vb"))
-      def rescore(cand: DataFrame): DataFrame = cand
-        .join(vpack.select(col("vec_id"), col("v").as("vb")), "vec_id")
-        .join(broadcast(qp), "qid")
-        .select(col("qid"), col("vec_id"), d2("qv", "vb").as("dd"))
-      var cur = qp.crossJoin(upper2)
-        .select(col("qid"), col("cand").as("vec_id"),
-          d2("qv", "vb").as("dd"))
+      def nearest(c: DataFrame): DataFrame = c
         .groupBy(col("qid"))
         .agg(min(struct(col("dd"), col("vec_id"))).as("m"))
         .select(col("qid"), col("m.vec_id").as("vec_id"),
           col("m.dd").as("dd"))
         .duckCkpt()
-      // greedy ef=1 descent: 3 hops, each expands exactly the ONE
-      // current node (paper-parity upper search; state is 4 rows)
-      for (_ <- 1 to 3) {
-        val nb = cur.join(edges1, cur("vec_id") === edges1("src"))
-          .select(col("qid"), col("dst").as("vec_id"))
-        val cand = nb.unionByName(cur.select(col("qid"), col("vec_id")))
-          .distinct()
-        cur = rescore(cand)
-          .groupBy(col("qid"))
-          .agg(min(struct(col("dd"), col("vec_id"))).as("m"))
-          .select(col("qid"), col("m.vec_id").as("vec_id"),
-            col("m.dd").as("dd"))
-          .duckCkpt()
-      }
-      // layer-0 beam-16 search seeded from the descended entry
-      val bw = Window.partitionBy(col("qid"))
-        .orderBy(col("dd"), col("vec_id"))
-      var state = cur.withColumn("exp", lit(false)).duckCkpt()
-      for (_ <- 1 to 4) {
-        val front = state.where(!col("exp"))
-          .withColumn("rn", row_number().over(bw))
-          .where(col("rn") <= 16)
-          .select(col("qid"), col("vec_id"))
-        val cand = front.join(edges, front("vec_id") === edges("src"))
-          .select(col("qid"), col("dst").as("vec_id")).distinct()
-          .join(state.select(col("qid"), col("vec_id")),
-            Seq("qid", "vec_id"), "left_anti")
-        val scored = rescore(cand).withColumn("exp", lit(false))
-        state = state
-          .join(front.withColumn("f", lit(true)),
-            Seq("qid", "vec_id"), "left")
-          .select(col("qid"), col("vec_id"), col("dd"),
-            (col("exp") || coalesce(col("f"), lit(false))).as("exp"))
-          .unionByName(scored)
-          .duckCkpt()
-      }
-      state.where(col("vec_id") =!= col("qid"))
-        .withColumn("rank", row_number().over(
-          Window.partitionBy(col("qid"))
-            .orderBy(col("dd"), col("vec_id"))).cast("long"))
-        .where(col("rank") <= 10)
-        .select(col("qid"), col("rank"), col("vec_id"),
-          r6(col("dd").cast("double") / lit(1e12)).as("dist"))
-        .orderBy(col("qid"), col("rank"))
+      Extras148.hnswBeamSearch(s, l0, rounds = 4, entry = (vpack, qp) => {
+        // L2 entry: exact nearest stride-256 node per query
+        var cur = nearest(qp.crossJoin(vpack.where(col("vec_id") % 256 === 0)
+            .select(col("vec_id").as("cand"), col("v").as("vb")))
+          .select(col("qid"), col("cand").as("vec_id"),
+            d2("qv", "vb").as("dd")))
+        // greedy ef=1 descent: 3 hops, each expands exactly the ONE
+        // current node (paper-parity upper search; state is 4 rows)
+        for (_ <- 1 to 3) {
+          val nb = cur.join(edges1, cur("vec_id") === edges1("src"))
+            .select(col("qid"), col("dst").as("vec_id"))
+          cur = nearest(rescore(
+            nb.unionByName(cur.select(col("qid"), col("vec_id"))).distinct(),
+            vpack, qp))
+        }
+        cur
+      })
     })
   )
 

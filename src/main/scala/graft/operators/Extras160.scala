@@ -3,18 +3,26 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
-import graft.{FixtureCache, Tables}
+import graft.FixtureCache
 
 /** Round-14 additions, part 1: the two ANN refinements named by the
   * round-13 verdict —
-  *   (a) q_llm_ann_ivfpq_lloyd2: residual IVF-PQ with a 2-STEP-Lloyd
-  *       trained codebook (verdict item 3): one more exact E-step /
-  *       M-step round over the 1-step book of q_llm_ann_ivfpq_lloyd.
-  *       Lloyd monotonically decreases quantization error, so recall
-  *       must be >= the 1-step book at both scales (measured in
-  *       BASELINE.md alongside the seed < 1-step ladder).
+  *   (a) q_llm_ann_ivfpq_lloyd2: the Extras148 residual IVF-PQ kernel
+  *       with a 2-STEP-Lloyd trained book: two exact (E, M) rounds,
+  *       each moving every non-empty codeword to the positive-shifted
+  *       ROUND-TO-NEAREST mean of its members ((Σ(r6+4e6) + n div 2)
+  *       div n − 4e6, identical on both engines because the numerator
+  *       is non-negative); empty codewords keep the previous round's
+  *       entry. Lloyd monotonically decreases quantization error, so
+  *       recall must be >= the 1-step book at both scales (measured in
+  *       BASELINE.md alongside the seed < 1-step ladder). Its rerank
+  *       shortlist is CORPUS-PROPORTIONAL, max(100, nv div 128): the
+  *       fixed 100 of the sibling keys is the measured 8× recall bug,
+  *       not the codebook — every lost true neighbor at 8× sat INSIDE a
+  *       probed cell at ADC rank 109-210. nv div 128 keeps the rerank a
+  *       constant fraction of per-cell occupancy as the corpus grows;
+  *       the floor 100 preserves the 1× behavior.
   *   (b) q_llm_ann_hnsw_bestfirst: the paper's 1-AT-A-TIME best-first
   *       layer-0 search (verdict item 4) over the SAME persisted graph
   *       as q_llm_ann_hnsw — each round expands exactly ONE node per
@@ -25,182 +33,31 @@ import graft.{FixtureCache, Tables}
   *       rounds are no-ops in both, so the driver loop may early-stop
   *       via a bounded 1-row-per-query read without divergence.
   *
-  * Scale shape: both ride the round-14 amortized-index convention —
-  * the corpus-sized build passes (assignment, codebook training,
-  * encode, graph kNN) persist via FixtureCache as parquet keyed by
-  * the source snapshot, and the graded query is SEARCH: cell-pruned
+  * Scale shape: both ride the amortized-index convention — the
+  * corpus-sized build passes persist via FixtureCache as parquet keyed
+  * by the source snapshot, and the graded query is SEARCH: cell-pruned
   * ADC scan + bounded rerank for (a); entry scan + <= 16 single-node
   * expansions of <= 9 edges each for (b).
   *
   * Determinism contract (SURVEY §2.13): all distances are exact
-  * BIGINT micro² zip-folds; both Lloyd M-steps are the exact
-  * positive-shifted round-to-nearest mean ((Σ(r6+4e6) + n div 2)
-  * div n − 4e6, identical truncation on both engines because the
-  * numerator is forced non-negative); every argmin/top-k ties on an
-  * id; emitted distances are ONE IEEE division + r6 on both engines.
+  * BIGINT micro² zip-folds; every argmin/top-k ties on an id; emitted
+  * distances are ONE IEEE division + r6 on both engines.
   */
 object Extras160 {
   import graft.Det._
+  import Extras148.d2
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
-    // RESIDUAL IVF-PQ + 2-step Lloyd: seed -> (E,M) -> (E,M) ->
-    // final encode; empty codewords keep the previous round's entry
-    // (the 1-step convention applied per round).
-    "q_llm_ann_ivfpq_lloyd2" -> ((s, d) => {
-      val P = s.conf.get("spark.sql.shuffle.partitions").toInt
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), posexplode(col("embedding")))
-        .toDF("vec_id", "pos", "x")
-        .select(col("vec_id"), (col("pos") + 1).as("dim"),
-          (round(col("x").cast("double"), 6).cast(DecimalType(18, 6))
-            * 1000000).cast("long").as("q6"))
-        .withColumn("sub", expr("(dim - 1) div 4"))
-        .repartition(P, col("vec_id")) // 1-partition expansion trap
-        .duckCkpt()             // shared-subtree rule
-      val nc = Tables.embeddings(s, d).agg(count(lit(1)).as("nv"))
-        .select(col("nv"), when(col("nv") <= 512, 8L)
-          .when(col("nv") <= 1024, 16L)
-          .when(col("nv") <= 2048, 32L)
-          .otherwise(64L).as("c"))
-        .withColumn("np", when(col("c") <= 16, 2L).otherwise(4L))
-        .withColumn("s", greatest(lit(1L), expr("(nv - c) div 256")))
-      val cent = e.crossJoin(broadcast(nc))
-        .where(col("vec_id") < col("c"))
-        .select(col("vec_id").as("ccid"), col("dim"), col("q6").as("c6"))
-      val cw0 = Window.partitionBy(col("vec_id"))
-        .orderBy(col("cdot").desc, col("ccid"))
-      def coarseDots(v: DataFrame): DataFrame =
-        v.join(broadcast(cent), "dim")
-          .groupBy(col("vec_id"), col("ccid"))
-          .agg(sum(col("q6") * col("c6")).as("cdot"))
-      val centR = cent.withColumnRenamed("dim", "cdim")
-      val idxDir = FixtureCache.ensure("ann_ivfpq_lloyd2_idx",
+    "q_llm_ann_ivfpq_lloyd2" -> ((s, d) => Extras148.searchResidualIvfpq(
+      s, d,
+      FixtureCache.ensure("ann_ivfpq_lloyd2_idx",
         Seq(s"$d/embeddings.parquet"),
-        "residual IVF-PQ: assign + 2-step-Lloyd (nearest-mean) " +
-          "codebook + codes, v2") { dest =>
-        coarseDots(e).withColumn("rn", row_number().over(cw0))
-          .where(col("rn") === 1)
-          .select(col("vec_id"), col("ccid").as("cell"))
-          .write.parquet(s"$dest/assign")
-        val assignB = s.read.parquet(s"$dest/assign")
-        val resid = e.join(assignB, "vec_id")
-          .join(broadcast(centR),
-            col("cell") === col("ccid") && col("dim") === col("cdim"))
-          .select(col("vec_id"), col("dim"), col("sub"),
-            (col("q6") - col("c6")).as("r6"))
-          .duckCkpt() // seed book, THREE encodes, two M-steps
-        val rcb0 = resid
-          .crossJoin(broadcast(nc.select(col("c"), col("s"))))
-          .where(col("vec_id") >= col("c")
-            && (col("vec_id") - col("c")) % col("s") === 0
-            && expr("(vec_id - c) div s") < 256)
-          .select(expr("(vec_id - c) div s").as("cw"), col("dim"),
-            col("r6").as("rc6"))
-          .duckCkpt()
-        val rsub = resid.groupBy(col("vec_id"), col("sub"))
-          .agg(sort_array(collect_list(struct(col("dim"), col("r6"))))
-            .as("rv"))
-          .repartition(P, col("vec_id")) // AQE would coalesce to 1
-          .duckCkpt()
-        def encodeAgainst(book: DataFrame): DataFrame = {
-          val cbSub = book
-            .withColumn("sub", expr("(dim - 1) div 4"))
-            .groupBy(col("sub"), col("cw"))
-            .agg(sort_array(collect_list(struct(col("dim"),
-              col("rc6")))).as("cv"))
-          rsub.join(broadcast(cbSub), "sub")
-            .select(col("vec_id"), col("sub"), col("cw"), expr(
-              """aggregate(zip_with(rv, cv,
-                   (a, b) -> (a.r6 - b.rc6) * (a.r6 - b.rc6)),
-                   CAST(0 AS BIGINT), (s, v) -> s + v)""").as("dist"))
-            .groupBy(col("vec_id"), col("sub"))
-            .agg(min(struct(col("dist"), col("cw"))).as("m"))
-            .select(col("vec_id"), col("sub"), col("m.cw").as("code"))
-        }
-        // one exact (E,M) Lloyd round over a given book: encode the
-        // corpus residuals, update every non-empty codeword to the
-        // positive-shifted ROUND-TO-NEAREST mean of its members
-        // ((S + n div 2) div n on the shifted non-negative numerator —
-        // identical on both engines), keep the previous entry for
-        // empty codewords. The 1-step key uses the floor mean; across
-        // TWO rounds the floor bias (−0.5 micro expected per round)
-        // compounds, measured: floor-floor read recall@10 0.83 at 8×
-        // vs the 1-step book's 0.85 (BASELINE.md round-14 part 1).
-        def lloydStep(book: DataFrame): DataFrame = {
-          val encI = encodeAgainst(book)
-          val updI = resid.join(encI, Seq("vec_id", "sub"))
-            .groupBy(col("code").as("cw"), col("dim"))
-            .agg(expr(
-              "CAST((sum(r6 + 4000000) + count(1) div 2) div count(1)" +
-                " - 4000000 AS BIGINT)").as("rc6t"))
-          book.join(updI, Seq("cw", "dim"), "left")
-            .select(col("cw"), col("dim"),
-              coalesce(col("rc6t"), col("rc6")).as("rc6"))
-            .duckCkpt() // next round's encode AND fallback
-        }
-        lloydStep(lloydStep(rcb0)).write.parquet(s"$dest/rcb2")
-        encodeAgainst(s.read.parquet(s"$dest/rcb2"))
-          .write.parquet(s"$dest/codes")
-      }
-      val assign = s.read.parquet(s"$idxDir/assign")
-      val rcb2 = s.read.parquet(s"$idxDir/rcb2")
-      val enc = s.read.parquet(s"$idxDir/codes")
-      val qprobe = coarseDots(e.where(col("vec_id").between(0, 3)))
-        .withColumn("rn", row_number().over(cw0))
-        .crossJoin(broadcast(nc.select(col("np"))))
-        .where(col("rn") <= col("np"))
-        .select(col("vec_id").as("qid"), col("ccid").as("cell"))
-      val qe = e.where(col("vec_id").between(0, 3))
-        .select(col("vec_id").as("qid"), col("dim"), col("sub"),
-          col("q6").as("qq6"))
-      val qres = qprobe.join(qe, "qid")
-        .join(broadcast(centR),
-          col("cell") === col("ccid") && col("dim") === col("cdim"))
-        .select(col("qid"), col("cell"), col("dim"), col("sub"),
-          (col("qq6") - col("c6")).as("rq6"))
-      val adc = qres.join(broadcast(rcb2), "dim")
-        .groupBy(col("qid"), col("cell"), col("sub"), col("cw"))
-        .agg(sum((col("rq6") - col("rc6")) * (col("rq6") - col("rc6")))
-          .as("d_qc"))
-      val candv = assign.join(broadcast(qprobe), "cell")
-        .where(col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("cell"), col("vec_id"))
-      val scored = candv.join(enc, "vec_id")
-        .join(broadcast(adc), Seq("qid", "cell", "sub"))
-        .where(col("code") === col("cw"))
-        .groupBy(col("qid"), col("vec_id"))
-        .agg(sum(col("d_qc")).as("adc_i"))
-      // CORPUS-PROPORTIONAL rerank shortlist (the fixed-100 depth of
-      // the sibling keys is the measured 8× recall bug, not the
-      // codebook: every lost true neighbor at 8× sat INSIDE a probed
-      // cell at ADC rank 109-210 — shortlist-bound. nv div 128 keeps
-      // the rerank a constant fraction of per-cell occupancy as the
-      // corpus grows; floor 100 preserves the 1× behavior.)
-      val cand = scored
-        .crossJoin(broadcast(nc.select(col("nv"))))
-        .withColumn("crank", row_number().over(
-          Window.partitionBy(col("qid"))
-            .orderBy(col("adc_i"), col("vec_id"))))
-        .where(col("crank") <= greatest(lit(100L), expr("nv div 128")))
-        .select(col("qid"), col("vec_id"), col("adc_i"))
-      val exact = cand.join(e.select(col("vec_id"), col("dim"),
-          col("q6").as("v6")), "vec_id")
-        .join(broadcast(qe.select(col("qid"), col("dim"), col("qq6"))),
-          Seq("qid", "dim"))
-        .groupBy(col("qid"), col("vec_id"), col("adc_i"))
-        .agg(sum((col("v6") - col("qq6")) * (col("v6") - col("qq6")))
-          .as("true_i"))
-      exact
-        .withColumn("rank", row_number().over(
-          Window.partitionBy(col("qid"))
-            .orderBy(col("true_i"), col("vec_id"))).cast("long"))
-        .where(col("rank") <= 10)
-        .select(col("qid"), col("rank"), col("vec_id"),
-          r6(col("adc_i").cast("double") / lit(1e12)).as("adc_dist"),
-          r6(col("true_i").cast("double") / lit(1e12)).as("true_dist"))
-        .orderBy(col("qid"), col("rank"))
-    }),
+        "residual IVF-PQ: assign + 2-step-Lloyd (nearest-mean) book + " +
+          "codes, v3")(
+        Extras148.buildResidualIvfpq(s, d,
+          Seq(Extras148.NearestMean, Extras148.NearestMean))),
+      shortlist = greatest(lit(100L), expr("nv div 128")))),
 
     // HNSW 1-AT-A-TIME BEST-FIRST layer-0 search over the persisted
     // q_llm_ann_hnsw graph (shared fixture — one index, two search
@@ -210,9 +67,6 @@ object Extras160 {
     // query's ef=16 best found (the paper's termination test);
     // <= 16 rounds, early-stopped when every query is done.
     "q_llm_ann_hnsw_bestfirst" -> ((s, d) =>
-      // same fixture as q_llm_ann_hnsw — ONE shared build derivation
-      // (round-14 ADVICE item 1: the two byte-duplicated bodies are
-      // now a single helper, so the recipe cannot drift)
       hnswBestFirstSearch(s, Extras148.buildHnswIndex(s, d,
         diversify = false)))
   )
@@ -224,10 +78,6 @@ object Extras160 {
   private[graft] def hnswBestFirstSearch(s: SparkSession,
       idxDir: String, ef: Int = 16, maxRounds: Int = 16): DataFrame = {
       val P = s.conf.get("spark.sql.shuffle.partitions").toInt
-      def d2(a: String, b: String) = expr(
-        s"""aggregate(zip_with($a, $b,
-              (x, y) -> (x.q6 - y.q6) * (x.q6 - y.q6)),
-              CAST(0 AS BIGINT), (s, v) -> s + v)""")
       val vpack = s.read.parquet(s"$idxDir/vpack").duckCkpt()
       val edges = s.read.parquet(s"$idxDir/edges")
         .repartition(P, col("src"))
@@ -240,15 +90,8 @@ object Extras160 {
       // entry = the single nearest upper-layer node per query (the
       // paper's ep; a 4-seed efSearch warm start was A/B'd and left
       // recall unchanged at both scales — BASELINE.md round-14)
-      var state = qp.crossJoin(
-          vpack.where(col("vec_id") % 16 === 0)
-            .select(col("vec_id").as("cand"), col("v").as("vb")))
-        .select(col("qid"), col("cand").as("vec_id"),
-          d2("qv", "vb").as("dd"))
-        .withColumn("rn", row_number().over(bw))
-        .where(col("rn") === 1)
-        .select(col("qid"), col("vec_id"), col("dd"),
-          lit(false).as("exp"))
+      var state = Extras148.strideEntry(vpack, qp)
+        .withColumn("exp", lit(false))
         .duckCkpt()
       // best-first rounds, ONE checkpoint + ONE bounded driver read
       // per round: the frontier is BY CONSTRUCTION <= 1 row per query

@@ -152,16 +152,7 @@ object Extras35 {
     // on the denser user%3 slice — the %7 graph is so sparse at smoke
     // scale that every 2-hop neighbor is already a direct one.
     "q_graph_two_hop" -> ((s, d) => {
-      val v = Tables.events(s, d)
-        .where(pmod(col("user_id"), lit(3L)) === 0)
-        .select(date_trunc("hour", col("ts")).as("h"),
-          col("event_type").as("t"), col("user_id").as("u"))
-        .distinct()
-      val und = v.as("x").join(v.as("y"),
-          col("x.h") === col("y.h") && col("x.t") === col("y.t")
-            && col("x.u") < col("y.u"))
-        .select(col("x.u").as("a"), col("y.u").as("b"))
-        .distinct()
+      val und = Extras11.undirectedEdges(s, d, mod = 3L)
       val e = und.select(col("a").as("src"), col("b").as("dst"))
         .unionByName(und.select(col("b").as("src"), col("a").as("dst")))
       // distinct + LEFT ANTI instead of EXCEPT: e is distinct by

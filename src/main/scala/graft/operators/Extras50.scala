@@ -19,6 +19,40 @@ import graft.{Det, Tables}
 object Extras50 {
   import Det._
 
+  /** Per-seed 3-hop frontier sizes (seed, n1, n2, n3) on the shared
+    * co-occurrence graph: seeds are the nodes with id % 35 == 0, and
+    * n_k counts the nodes first reached at exactly k hops. Harmonic and
+    * truncated closeness centrality are two formulas over these counts. */
+  private[operators] def hopCounts3(s: SparkSession, d: String): DataFrame = {
+    val und = Extras11.undirectedEdges(s, d)
+    val e = und.select(col("a").as("src"), col("b").as("dst"))
+      .unionByName(und.select(col("b").as("src"), col("a").as("dst")))
+    val seeds = e.select(col("src").as("seed")).distinct()
+      .where(pmod(col("seed"), lit(35L)) === 0)
+    val d1 = seeds.join(e, col("seed") === col("src"))
+      .select(col("seed"), col("dst").as("v")).distinct()
+      .where(col("seed") =!= col("v"))
+    val d2 = d1.join(e, col("v") === col("src"))
+      .select(col("seed"), col("dst").as("v2")).distinct()
+      .where(col("seed") =!= col("v2"))
+      .join(d1.select(col("seed"), col("v").as("v2")),
+        Seq("seed", "v2"), "left_anti")
+    val d3 = d2.join(e, col("v2") === col("src"))
+      .select(col("seed"), col("dst").as("v3")).distinct()
+      .where(col("seed") =!= col("v3"))
+      .join(d1.select(col("seed"), col("v").as("v3")),
+        Seq("seed", "v3"), "left_anti")
+      .join(d2.select(col("seed"), col("v2").as("v3")),
+        Seq("seed", "v3"), "left_anti")
+    val h1 = d1.groupBy(col("seed")).agg(count(lit(1)).as("n1"))
+    val h2 = d2.groupBy(col("seed")).agg(count(lit(1)).as("n2"))
+    val h3 = d3.groupBy(col("seed")).agg(count(lit(1)).as("n3"))
+    h1.join(h2, Seq("seed"), "left").join(h3, Seq("seed"), "left")
+      .select(col("seed"), col("n1"),
+        coalesce(col("n2"), lit(0L)).as("n2"),
+        coalesce(col("n3"), lit(0L)).as("n3"))
+  }
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // KAPLAN-MEIER SURVIVAL — time from first to second order per
@@ -104,33 +138,7 @@ object Extras50 {
     // each hop is one frontier⋈edges join + anti-join dedup, the
     // Components/BFS discipline.
     "q_graph_harmonic" -> ((s, d) => {
-      val und = Extras11.undirectedEdges(s, d)
-      val e = und.select(col("a").as("src"), col("b").as("dst"))
-        .unionByName(und.select(col("b").as("src"), col("a").as("dst")))
-      val seeds = e.select(col("src").as("seed")).distinct()
-        .where(pmod(col("seed"), lit(35L)) === 0)
-      val d1 = seeds.join(e, col("seed") === col("src"))
-        .select(col("seed"), col("dst").as("v")).distinct()
-        .where(col("seed") =!= col("v"))
-      val d2 = d1.join(e, col("v") === col("src"))
-        .select(col("seed"), col("dst").as("v2")).distinct()
-        .where(col("seed") =!= col("v2"))
-        .join(d1.select(col("seed"), col("v").as("v2")),
-          Seq("seed", "v2"), "left_anti")
-      val d3 = d2.join(e, col("v2") === col("src"))
-        .select(col("seed"), col("dst").as("v3")).distinct()
-        .where(col("seed") =!= col("v3"))
-        .join(d1.select(col("seed"), col("v").as("v3")),
-          Seq("seed", "v3"), "left_anti")
-        .join(d2.select(col("seed"), col("v2").as("v3")),
-          Seq("seed", "v3"), "left_anti")
-      val h1 = d1.groupBy(col("seed")).agg(count(lit(1)).as("n1"))
-      val h2 = d2.groupBy(col("seed")).agg(count(lit(1)).as("n2"))
-      val h3 = d3.groupBy(col("seed")).agg(count(lit(1)).as("n3"))
-      h1.join(h2, Seq("seed"), "left").join(h3, Seq("seed"), "left")
-        .select(col("seed"), col("n1"),
-          coalesce(col("n2"), lit(0L)).as("n2"),
-          coalesce(col("n3"), lit(0L)).as("n3"))
+      hopCounts3(s, d)
         .withColumn("harmonic_sixths", col("n1") * 6
           + col("n2") * 3 + col("n3") * 2)
         .withColumn("harmonic",

@@ -61,16 +61,7 @@ object Extras66 {
     // power-iteration shape where only the (node, score) relation
     // moves; the edge relation is built once and localCheckpoint'd.
     "q_graph_eigencentrality" -> ((s, d) => {
-      val v = Tables.events(s, d)
-        .where(pmod(col("user_id"), lit(7L)) === 0)
-        .select(date_trunc("hour", col("ts")).as("h"),
-          col("event_type").as("t"), col("user_id").as("u"))
-        .distinct()
-      val und = v.as("x").join(v.as("y"),
-          col("x.h") === col("y.h") && col("x.t") === col("y.t")
-            && col("x.u") < col("y.u"))
-        .select(col("x.u").as("a"), col("y.u").as("b"))
-        .distinct()
+      val und = Extras11.undirectedEdges(s, d)
       val edges = und.select(col("a").as("src"), col("b").as("dst"))
         .unionByName(und.select(col("b").as("src"), col("a").as("dst")))
         .duckCkpt()

@@ -73,9 +73,13 @@ object Extras73 {
     // per doc, no gram strings built — emitting each doc's DISTINCT
     // 8-byte gram fingerprints. Joining on fingerprints instead of raw
     // grams is the same no-64-bit-collision trade the 3-gram
-    // q_llm_contamination and the whole MinHash family document
-    // (P(any collision) ≈ n²/2⁶⁵); equal grams hash equal on both
-    // sides, so hits and per-doc distinct counts are unchanged.
+    // q_llm_contamination and the whole MinHash family document. The
+    // n²/2⁶⁵ birthday figure holds only for independent uniform
+    // hashes; an FNV-1a fold with a fixed polynomial combine is
+    // neither, so it is a heuristic scale, not a bound — structured
+    // inputs can collide more often. Equal grams hash equal on both
+    // sides, so no true hit is lost; a collision can only merge two
+    // distinct grams (a false hit, or one fewer distinct gram).
     val B = 0x9E3779B97F4A7C15L // odd ⇒ invertible mod 2^64
     def grams(keep: (Long, Long) => Boolean) = Tables.documents(s, d)
       .select(col("doc_id"), col("text")).as[(Long, String)]

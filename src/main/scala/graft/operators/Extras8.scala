@@ -283,16 +283,7 @@ object Extras8 {
     // halves the join fan-out; at 100 TB you'd add degree-based
     // orientation (join through the lower-degree endpoint).
     "q_graph_triangles" -> ((s, d) => {
-      val ev = Tables.events(s, d)
-        .where(pmod(col("user_id"), lit(7L)) === 0)
-        .select(date_trunc("hour", col("ts")).as("h"),
-          col("event_type").as("t"), col("user_id").as("u"))
-        .distinct()
-      val e = ev.as("x").join(ev.as("y"),
-          col("x.h") === col("y.h") && col("x.t") === col("y.t")
-            && col("x.u") < col("y.u"))
-        .select(col("x.u").as("a"), col("y.u").as("b"))
-        .distinct()
+      val e = Extras11.undirectedEdges(s, d)
       val tri = e.as("e1")
         .join(e.as("e2"), col("e1.b") === col("e2.a"))
         .join(e.as("e3"),

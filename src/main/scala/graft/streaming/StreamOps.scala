@@ -102,11 +102,9 @@ object StreamOps {
     val prevPart = conf.get(partKey)
     val prevProv = conf.getOption(provKey)
     conf.set(partKey, math.min(prevPart.toInt, 8).toString)
-    // Provider override order: sysprop (in-JVM tests) > env (the sbt
-    // `run` task forks, so a probe A/B — RocksDB vs HDFSBacked — is
-    // driven by SPARK_GRAFT_STATESTORE) > RocksDB default.
+    // Provider override: the graft.stateStoreProvider sysprop (in-JVM
+    // tests A/B RocksDB vs HDFSBacked through it) > RocksDB default.
     conf.set(provKey, sys.props.get("graft.stateStoreProvider")
-      .orElse(sys.env.get("SPARK_GRAFT_STATESTORE"))
       .getOrElse(
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
     try f finally {
