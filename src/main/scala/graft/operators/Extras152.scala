@@ -49,8 +49,9 @@ object Extras152 {
       // packed vectors (per-cell 4-NN among the stride-16 nodes ∪ each
       // L1 node → its cell's L1 hub ∪ hub mesh, for hops that must
       // cross cells) persists as parquet keyed by the source snapshot
+      // and the layer-0 fixture it reads, so a rebuilt layer 0 rebuilds it
       val idxDir = FixtureCache.ensure("ann_hnsw_ml_idx",
-        Seq(s"$d/embeddings.parquet"),
+        Seq(s"$d/embeddings.parquet", l0),
         "L1 4-NN/hub/mesh edge list over the ann_hnsw_idx packed " +
           "vectors, v2") { dest =>
         val l1 = Extras148.withCells(s, d, s.read.parquet(s"$l0/vpack"))
