@@ -142,7 +142,10 @@ object FenceProbe {
                 .flatMap(g => scala.util.Try(BigDecimal(g.group(1))).toOption)
                 .getOrElse(BigDecimal(Long.MaxValue)) // unparseable → worst case
               Fired(v.abs)
-            case e: Throwable => Err(s"ERR ${e.getClass.getSimpleName}")
+            case e: Throwable =>
+              Err(s"ERR ${e.getClass.getSimpleName}: " +
+                Option(e.getMessage).map(_.linesIterator.take(1).mkString)
+                  .getOrElse(""))
           }
         runGuarded(WATCH) match {
           case Clean    => nPass += 1

@@ -31,10 +31,13 @@ import java.util.concurrent.ConcurrentHashMap
   * own build and adopts the winner's (the stamp guarantees equivalence). A
   * directory is only ever visible complete, because the marker is written
   * inside the build dir BEFORE the rename. The marker name starts with '_'
-  * so Spark's file index ignores it like _SUCCESS.
+  * so Spark's file index ignores it like _SUCCESS. A directory whose
+  * marker is current is never removed: only debris (marker missing or
+  * stale) is, and it is first renamed aside to a unique name, so a JVM
+  * that installs a current copy in the meantime keeps it.
   */
 object FixtureCache {
-  private val markerName = "_GRAFT_STAMP"
+  private[graft] val markerName = "_GRAFT_STAMP"
 
   /** Every fixture name that any query `ensure()`s, mapped to ONE
     * SparkEntry query key that builds it. Bench prewarms by running each
@@ -144,6 +147,26 @@ object FixtureCache {
       new String(Files.readAllBytes(m), "UTF-8") == stamp
   }
 
+  /** Remove `dir` if it exists without a current marker: rename it aside
+    * to a unique sibling, then delete that. A rename that finds nothing
+    * means another JVM moved the debris first. */
+  private def removeDebris(dir: Path, stamp: String): Unit =
+    if (Files.exists(dir) && !isCurrent(dir, stamp)) {
+      val aside = dir.resolveSibling(
+        s"${dir.getFileName}.debris-${java.util.UUID.randomUUID()}")
+      try {
+        Files.move(dir, aside, StandardCopyOption.ATOMIC_MOVE)
+        deleteRecursively(aside)
+      } catch { case _: java.nio.file.NoSuchFileException => () }
+    }
+
+  /** The cache directory of layout `name` over `sources` and its stamp. */
+  private[graft] def locate(name: String, sources: Seq[String],
+      salt: String = ""): (Path, String) = {
+    val stamp = name + "\n" + salt + "\n" + sources.map(stampOf).mkString("\n")
+    (root.resolve(s"$name-${md5hex(stamp)}"), stamp)
+  }
+
   /** Return a directory holding the layout `name` derived from `sources`,
     * building it with `build(destDir)` only when no current copy exists.
     * `build` must create `destDir` itself (a Spark `df.write...` does).
@@ -151,22 +174,23 @@ object FixtureCache {
     * a code change to the layout invalidates cached copies of the old one. */
   def ensure(name: String, sources: Seq[String], salt: String = "")
             (build: String => Unit): String = {
-    val stamp = name + "\n" + salt + "\n" + sources.map(stampOf).mkString("\n")
-    val finalDir = root.resolve(s"$name-${md5hex(stamp)}")
+    val (finalDir, stamp) = locate(name, sources, salt)
     val cached = inJvm.get(finalDir.toString)
     if (cached != null) return cached
     this.synchronized {
       if (!isCurrent(finalDir, stamp)) {
         // A same-named dir with a bad/missing marker can only be debris
         // from an interrupted older layout scheme — rebuild over it.
-        deleteRecursively(finalDir)
+        removeDebris(finalDir, stamp)
         val tmp = root.resolve(
           s"${finalDir.getFileName}.build-${java.util.UUID.randomUUID()}")
         build(tmp.toString)
         Files.write(tmp.resolve(markerName), stamp.getBytes("UTF-8"))
-        try Files.move(tmp, finalDir, StandardCopyOption.ATOMIC_MOVE)
+        // Another JVM may have installed the same stamp meanwhile, during
+        // the build or in a rename race; then adopt its copy.
+        if (isCurrent(finalDir, stamp)) deleteRecursively(tmp)
+        else try Files.move(tmp, finalDir, StandardCopyOption.ATOMIC_MOVE)
         catch {
-          // Another JVM installed the same stamp first; adopt its copy.
           case _: java.nio.file.FileAlreadyExistsException |
                _: java.nio.file.DirectoryNotEmptyException |
                _: java.nio.file.AccessDeniedException =>

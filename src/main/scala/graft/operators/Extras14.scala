@@ -6,7 +6,11 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.{Det, Tables}
-import graft.streaming.{Event, StreamOps}
+import graft.streaming.StreamOps
+
+/** An Event without its props JSON: every field the CDC state reads. */
+case class CdcEvent(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
+    event_type: String, value: Double)
 
 /** Per-user CDC state: the latest (by (us, event_id)) change record. */
 case class CdcLatest(user_id: Long, us: Long, event_id: Long,
@@ -66,12 +70,12 @@ object Extras14 {
     // key's last record, exactly the batch oracle's semantics.
     "q_stream_live_cdc" -> ((s, d) => {
       import s.implicits._
-      val latest = StreamOps.eventsFileStream(s, d).as[Event]
+      val latest = StreamOps.narrow[CdcEvent](StreamOps.eventsFileStream(s, d))
         .groupByKey(_.user_id)
         .flatMapGroupsWithState[CdcLatest, CdcLatest](
           OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
-          (uid: Long, events: Iterator[Event], state: GroupState[CdcLatest]) =>
-            def rec(e: Event): CdcLatest = CdcLatest(uid,
+          (uid: Long, events: Iterator[CdcEvent], state: GroupState[CdcLatest]) =>
+            def rec(e: CdcEvent): CdcLatest = CdcLatest(uid,
               e.ts.getTime * 1000L + (e.ts.getNanos / 1000L) % 1000L,
               e.event_id, e.event_type,
               new java.math.BigDecimal(e.value)

@@ -9,6 +9,8 @@ import graft.{Det, Tables}
 
 /** Per-user session accumulator for the event-time-timeout key. */
 case class SessAcc(startUs: Long, lastUs: Long, n: Long)
+/** The three Event fields the session-timeout state reads. */
+case class SessEvent(user_id: Long, ts: java.sql.Timestamp, event_id: Long)
 case class SessOut(user_id: Long, start_us: Long, end_us: Long,
     n_events: Long)
 
@@ -162,9 +164,9 @@ object Extras20 {
     // session assembly iterator-order-free.
     "q_stream_live_timeout" -> ((s, d) => {
       import s.implicits._
-      val ds = graft.streaming.StreamOps.eventsFileStream(s, d)
-        .withWatermark("ts", "10 minutes")
-        .as[graft.streaming.Event]
+      val ds = graft.streaming.StreamOps.narrow[SessEvent](
+        graft.streaming.StreamOps.eventsFileStream(s, d)
+          .withWatermark("ts", "10 minutes"))
       val sessions = ds.groupByKey(_.user_id)
         .flatMapGroupsWithState[SessAcc, SessOut](
           OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {

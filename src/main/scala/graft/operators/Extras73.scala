@@ -6,7 +6,11 @@ import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, GroupState
 import org.apache.spark.sql.types.DecimalType
 
 import graft.{Det, Tables}
-import graft.streaming.{Event, StreamOps}
+import graft.streaming.StreamOps
+
+/** The two Event fields the streaming-KMV state reads: its key and the
+  * user id it hashes. */
+case class TypeUser(event_type: String, user_id: Long)
 
 /** Streaming-KMV state: the ≤k smallest distinct 60-bit user hashes
   * seen per event type, plus a processed-row counter that makes the
@@ -131,11 +135,12 @@ object Extras73 {
     // the distinct set (exact); else (k−1)·2^60/h_k.
     "q_stream_live_kmv" -> ((s, d) => {
       import s.implicits._
-      val sketched = StreamOps.eventsFileStream(s, d).as[Event]
+      val sketched =
+        StreamOps.narrow[TypeUser](StreamOps.eventsFileStream(s, d))
         .groupByKey(_.event_type)
         .flatMapGroupsWithState[KmvSketchState, KmvSketchState](
           OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
-          (et: String, events: Iterator[Event],
+          (et: String, events: Iterator[TypeUser],
            state: GroupState[KmvSketchState]) =>
             val prev = state.getOption
               .getOrElse(KmvSketchState(et, Array.empty[Long], 0L))

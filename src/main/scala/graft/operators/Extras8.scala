@@ -186,26 +186,16 @@ object Extras8 {
     // event values in a RocksDB-backed ValueState. Max is comparison-only
     // (no float arithmetic), so every emission is an exact input value
     // and the per-user max of emissions equals the batch MAX whatever the
-    // micro-batch split. The RocksDB provider is required by
-    // transformWithState and scoped to this run (set/restored around the
-    // start, like the state-partition cap).
+    // micro-batch split. transformWithState requires the RocksDB
+    // provider, which runToMemoryUpdate pins for the run.
     "q_stream_live_tws" -> ((s, d) => {
       import s.implicits._
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
-        val run = StreamOps.runningMax(
-          StreamOps.eventsFileStream(s, d).as[Event]).toDF("user_id", "vmax")
-        StreamOps.runToMemoryUpdate(run, "live_tws")
-          .groupBy(col("user_id"))
-          .agg(max(col("vmax")).as("max_value"))
-          .orderBy("user_id")
-      } finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
-      }
+      val run = StreamOps.runningMax(
+        StreamOps.eventsFileStream(s, d).as[Event]).toDF("user_id", "vmax")
+      StreamOps.runToMemoryUpdate(run, "live_tws")
+        .groupBy(col("user_id"))
+        .agg(max(col("vmax")).as("max_value"))
+        .orderBy("user_id")
     }),
 
     // Exact-arithmetic k-means assignment (one Lloyd step, k=4): every

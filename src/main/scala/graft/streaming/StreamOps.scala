@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
   StatefulProcessor, TimeMode, TTLConfig, ValueState}
@@ -13,6 +13,10 @@ case class Event(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
 
 /** Per-user running state emitted by the stateful operator. */
 case class UserRunning(user_id: Long, n_events: Long, total_value: Double)
+
+/** The two Event fields the per-user value states read (running cents,
+  * running max): the projection those operators shuffle. */
+case class UserValue(user_id: Long, value: Double)
 
 /** Exact-cents running state — the hash-safe sibling of UserRunning: a
   * long accumulator is order-free within a micro-batch, unlike the double
@@ -94,27 +98,44 @@ object StreamOps {
     * graded live-streaming query under RocksDB means the provider the
     * results are graded on is the provider a production cluster would
     * use — results are provider-invariant (RocksDbSweepSpec re-proves
-    * hash-equality against the heap provider on every test run). */
+    * hash-equality against the heap provider on every test run).
+    *
+    * RocksDB commits as changelogs: each micro-batch's commit writes the
+    * batch's key puts and deletes to a changelog file instead of flushing
+    * the memtable and uploading a snapshot, and snapshots are taken in
+    * the background every few versions. Recovery loads the last snapshot
+    * and replays the changelogs after it, so a restart still rebuilds the
+    * exact state of the last committed batch (the deterministic-replay
+    * argument of D-Streams) while each commit writes only what changed.
+    * The provider ignores the setting under the heap-provider override. */
   def withCappedState[T](spark: SparkSession)(f: => T): T = {
     val conf = spark.conf
     val partKey = "spark.sql.shuffle.partitions"
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevPart = conf.get(partKey)
-    val prevProv = conf.getOption(provKey)
-    conf.set(partKey, math.min(prevPart.toInt, 8).toString)
-    // Provider override: the graft.stateStoreProvider sysprop (in-JVM
-    // tests A/B RocksDB vs HDFSBacked through it) > RocksDB default.
-    conf.set(provKey, sys.props.get("graft.stateStoreProvider")
-      .getOrElse(
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
-    try f finally {
-      conf.set(partKey, prevPart)
-      prevProv match {
-        case Some(v) => conf.set(provKey, v)
-        case None => conf.unset(provKey)
-      }
+    val pins = Seq(
+      partKey -> math.min(conf.get(partKey).toInt, 8).toString,
+      // Provider override: the graft.stateStoreProvider sysprop (in-JVM
+      // tests A/B RocksDB vs HDFSBacked through it) > RocksDB default.
+      "spark.sql.streaming.stateStore.providerClass" ->
+        sys.props.getOrElse("graft.stateStoreProvider",
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"),
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
+        "true")
+    val prev = pins.map { case (k, _) => k -> conf.getOption(k) }
+    pins.foreach { case (k, v) => conf.set(k, v) }
+    try f finally prev.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
     }
   }
+
+  /** `ds` cut to the fields of `T`, by name, as a typed Dataset. A typed
+    * state shuffle (groupByKey → flatMapGroupsWithState or
+    * transformWithState) carries every column of its input row, read by
+    * the state function or not; narrowing first keeps the rest (the props
+    * JSON above all) out of the exchange and the state. */
+  def narrow[T: Encoder](ds: Dataset[_]): Dataset[T] =
+    ds.select(implicitly[Encoder[T]].schema.fieldNames.toSeq.map(col(_)): _*)
+      .as[T]
 
   private def runSink(df: DataFrame, name: String, mode: String): DataFrame =
     withStatePartitions(df) {
@@ -196,10 +217,11 @@ object StreamOps {
     * the order events drain from the group iterator. */
   def runningPerUserCents(ds: Dataset[Event]): Dataset[UserRunningCents] = {
     import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
+    narrow[UserValue](ds).groupByKey(_.user_id)
       .flatMapGroupsWithState[UserRunningCents, UserRunningCents](
         OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
-        (uid: Long, events: Iterator[Event], state: GroupState[UserRunningCents]) =>
+        (uid: Long, events: Iterator[UserValue],
+         state: GroupState[UserRunningCents]) =>
           val prev = state.getOption.getOrElse(UserRunningCents(uid, 0L, 0L))
           var n = prev.n_events
           var c = prev.cents
@@ -218,12 +240,13 @@ object StreamOps {
   /** Spark 4 transformWithState processor: per-user high-watermark of
     * event values held in a ValueState (the modern arbitrary-state API;
     * requires the RocksDB state store provider). */
-  class MaxValueProcessor extends StatefulProcessor[Long, Event, (Long, Double)] {
+  class MaxValueProcessor
+      extends StatefulProcessor[Long, UserValue, (Long, Double)] {
     @transient private var maxState: ValueState[Double] = _
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       maxState = getHandle.getValueState[Double]("max",
         Encoders.scalaDouble, TTLConfig.NONE)
-    override def handleInputRows(key: Long, rows: Iterator[Event],
+    override def handleInputRows(key: Long, rows: Iterator[UserValue],
         timerValues: org.apache.spark.sql.streaming.TimerValues): Iterator[(Long, Double)] = {
       val prev = if (maxState.exists()) maxState.get() else Double.NegativeInfinity
       val mx = rows.foldLeft(prev)((m, e) => math.max(m, e.value))
@@ -235,7 +258,7 @@ object StreamOps {
   /** Per-user running max via transformWithState. */
   def runningMax(ds: Dataset[Event]): Dataset[(Long, Double)] = {
     import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
+    narrow[UserValue](ds).groupByKey(_.user_id)
       .transformWithState(new MaxValueProcessor,
         TimeMode.None(), OutputMode.Update())
   }

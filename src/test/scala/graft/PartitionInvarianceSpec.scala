@@ -6,8 +6,12 @@ package graft
   * is the property that lets the same code run on local[4] and a large
   * cluster without result drift — decimal/integer exactness plus total
   * ordering make results independent of parallelism by construction, and
-  * this spec re-proves it for the WHOLE declared surface on every run. */
-class PartitionInvarianceSpec extends QuerySuiteBase {
+  * this spec re-proves it for the WHOLE declared surface on every run.
+  *
+  * The sweep is split across `PartitionInvarianceSpec.Shards` suites by a
+  * stable hash of the key name (String.hashCode is fixed by the Java
+  * spec), so the forked test groups can run its parts side by side. */
+abstract class PartitionInvarianceSpec(shard: Int) extends QuerySuiteBase {
 
   private lazy val other = {
     val s = spark.newSession()
@@ -25,14 +29,27 @@ class PartitionInvarianceSpec extends QuerySuiteBase {
     * genuinely-bounded emits. */
   private val boundedNotExact = Set.empty[String]
 
-  SparkEntry.queries.keys.toSeq.sorted.foreach { name =>
-    test(s"$name: identical result at shuffle=4 and shuffle=7") {
-      val base = fingerprint(SparkEntry.queries(name)(spark, sf))
-      val alt = fingerprint(SparkEntry.queries(name)(other, sf))
-      if (boundedNotExact(name)) assert(base._1 == alt._1,
-        s"$name row count depends on the shuffle partition count")
-      else assert(base == alt,
-        s"$name result depends on the shuffle partition count")
+  SparkEntry.queries.keys.toSeq.sorted
+    .filter(PartitionInvarianceSpec.shardOf(_) == shard)
+    .foreach { name =>
+      test(s"$name: identical result at shuffle=4 and shuffle=7") {
+        val base = fingerprint(SparkEntry.queries(name)(spark, sf))
+        val alt = fingerprint(SparkEntry.queries(name)(other, sf))
+        if (boundedNotExact(name)) assert(base._1 == alt._1,
+          s"$name row count depends on the shuffle partition count")
+        else assert(base == alt,
+          s"$name result depends on the shuffle partition count")
+      }
     }
-  }
 }
+
+object PartitionInvarianceSpec {
+  val Shards = 4
+  def shardOf(key: String): Int = Math.floorMod(key.hashCode, Shards)
+}
+
+class PartitionInvariance0Spec extends PartitionInvarianceSpec(0)
+class PartitionInvariance1Spec extends PartitionInvarianceSpec(1)
+class PartitionInvariance2Spec extends PartitionInvarianceSpec(2)
+class PartitionInvariance3Spec extends PartitionInvarianceSpec(3)
+

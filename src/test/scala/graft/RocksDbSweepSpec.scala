@@ -24,13 +24,20 @@ class RocksDbSweepSpec extends QuerySuiteBase {
 
   test("live runners pin the RocksDB provider for the run, then restore") {
     val key = "spark.sql.streaming.stateStore.providerClass"
+    val changelog =
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
     val before = spark.conf.getOption(key)
+    val changelogBefore = spark.conf.getOption(changelog)
     StreamOps.withCappedState(spark) {
       assert(spark.conf.get(key).contains("RocksDBStateStoreProvider"),
         "withCappedState must pin the RocksDB provider")
+      assert(spark.conf.get(changelog) == "true",
+        "withCappedState must commit RocksDB state as changelogs")
       assert(spark.conf.get("spark.sql.shuffle.partitions").toInt <= 8)
     }
     assert(spark.conf.getOption(key) == before, "provider conf leaked")
+    assert(spark.conf.getOption(changelog) == changelogBefore,
+      "changelog conf leaked")
   }
 
   for (k <- sweepKeys)
@@ -47,7 +54,8 @@ class RocksDbSweepSpec extends QuerySuiteBase {
     }
 
   test("q_stream_live_tws runs RocksDB regardless of the session default") {
-    // transformWithState requires RocksDB; the query pins it itself.
+    // transformWithState requires RocksDB; runToMemoryUpdate pins it
+    // through withCappedState.
     assert(fingerprint(q("q_stream_live_tws"))._1 > 0)
   }
 }
