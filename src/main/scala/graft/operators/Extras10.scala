@@ -112,36 +112,31 @@ object Extras10 {
     // PAGERANK — integer fixed-point (rank in ppm, damping 0.85 as
     // 850000/1000000 with integer division; all values non-negative so
     // div/// agree), 3 iterations over the symmetrized hourly
-    // co-occurrence graph q_graph_triangles defined. The contribution
-    // edge list (src, dst, outdeg) is built once and localCheckpoint'd;
-    // each iteration is one join (ranks onto edges by src) + one groupBy
-    // dst — the textbook distributed PageRank shape, where at 100 TB the
-    // edge relation stays partitioned by src across iterations and only
-    // the (node, rank) relation — orders of magnitude smaller — moves.
-    // Round 1 needs no join: every node starts at rank 10^6, so its
-    // input is the checkpointed edge list with that constant rank, and
+    // co-occurrence graph q_graph_triangles defined. Each iteration is
+    // one join (ranks onto edges by src) + one groupBy dst — the
+    // textbook distributed PageRank shape. Extras11.rankLoop keeps the
+    // (src, dst, outdeg) edge list persisted and partitioned by src, so
+    // only the (node, rank) relation — orders of magnitude smaller —
+    // moves per round, and releases it once the last round is
+    // materialised. Round 1 needs no join: every node starts at rank
+    // 10^6, so its input is the edge list with that constant rank, and
     // the graph is built (events scanned) once per run.
-    "q_graph_pagerank" -> ((s, d) => {
-      val und = Extras11.undirectedEdges(s, d)
-      val edges = und.select(col("a").as("src"), col("b").as("dst"))
-        .unionByName(und.select(col("b").as("src"), col("a").as("dst")))
-      val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-      val ce = edges.join(deg, "src").duckCkpt()
+    "q_graph_pagerank" -> ((s, d) => Extras11.rankLoop(s, d) { ce =>
       def step(ranked: DataFrame): DataFrame = ranked
         .groupBy(col("dst"))
         .agg(sum(expr("rank div outdeg")).as("contrib"))
         .select(col("dst").as("u"),
           expr("CAST(150000 + (850000 * contrib) div 1000000 AS BIGINT)")
             .as("rank"))
-        // lazy (round 16): the rounds chain linearly into the final
-        // action — each marked checkpoint materializes inside that one
-        // job instead of paying a dedicated job per round.
-        .duckCkptLazy()
       var r = step(ce.withColumn("rank", lit(1000000L)))
+      // lazy (round 16): the rounds chain linearly into rankLoop's eager
+      // checkpoint of the last one — each marked checkpoint
+      // materializes inside that one job instead of paying a dedicated
+      // job per round.
       for (_ <- 2 to PageRankIters)
-        r = step(ce.join(r.withColumnRenamed("u", "src"), "src"))
-      r.orderBy("u")
-    }),
+        r = step(ce.join(r.duckCkptLazy().withColumnRenamed("u", "src"), "src"))
+      r
+    }.orderBy("u")),
 
     // EDIT-DISTANCE scalar family — levenshtein over derived string pairs
     // (vs reversed self, vs another column, vs a digit-flipped phone).

@@ -40,6 +40,30 @@ object Extras11 {
       .distinct()
   }
 
+  /** The rank loops' driver (PageRank, personalised PageRank,
+    * eigenvector centrality): runs `loop` over the symmetric % 7 graph
+    * as (src, dst, outdeg) edges and returns its last round, materialised.
+    *
+    * The edges are hash-partitioned by src once, the out-degrees are
+    * counted and joined inside those partitions, and the relation is
+    * persisted, so every round's join by src moves only the (node, rank)
+    * side: a persisted plan keeps its partitioning, where a local
+    * checkpoint's rescan reads as unpartitioned and would shuffle the
+    * whole edge list again each round. The last round is checkpointed
+    * eagerly and the edges are unpersisted before this returns, so the
+    * cache lives inside one invocation and the result reads none of it. */
+  private[operators] def rankLoop(s: SparkSession, d: String)(
+      loop: DataFrame => DataFrame): DataFrame = {
+    val und = undirectedEdges(s, d)
+    val edges = und.select(col("a").as("src"), col("b").as("dst"))
+      .unionByName(und.select(col("b").as("src"), col("a").as("dst")))
+      .repartition(s.sessionState.conf.numShufflePartitions, col("src"))
+    val ce = edges
+      .withColumn("outdeg", count(lit(1)).over(Window.partitionBy(col("src"))))
+      .persist()
+    try loop(ce).duckCkpt() finally ce.unpersist()
+  }
+
   private[operators] val GraphSql =
     """v AS (SELECT DISTINCT date_trunc('hour', ts::TIMESTAMP) AS h,
                              event_type AS t, user_id AS u

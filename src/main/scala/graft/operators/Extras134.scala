@@ -17,7 +17,8 @@ import graft.{Det, Tables}
   * health metric).
   *
   * Scale shape: PPR iterates the integer micro-rank kernel
-  * (localCheckpoint per round, the q_graph_pagerank discipline) with
+  * (Extras11.rankLoop: edges persisted and partitioned by src, ranks
+  * localCheckpoint'd per round, the q_graph_pagerank discipline) with
   * the teleport entering through a LEFT join from the node set so
   * contribution-less seeds persist; ewma_chart rides the 16-day
   * truncated power-of-2 window (the q_ts_ewma kernel) + one exact
@@ -39,35 +40,30 @@ object Extras134 {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // PERSONALIZED PAGERANK — teleport to the u%35=0 seeds only.
-    "q_graph_ppr" -> ((s, d) => {
-      val und = Extras11.undirectedEdges(s, d)
-      val edges = und.select(col("a").as("src"), col("b").as("dst"))
-        .unionByName(und.select(col("b").as("src"), col("a").as("dst")))
-      val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-      val ce = edges.join(deg, "src").duckCkpt()
-      val nodes = deg.select(col("src").as("u"),
+    "q_graph_ppr" -> ((s, d) => Extras11.rankLoop(s, d) { ce =>
+      val nodes = ce.select(col("src").as("u"),
           (pmod(col("src"), lit(35L)) === 0).cast("long").as("seed"))
+        .distinct()
         .duckCkpt()
       val counts = nodes.agg(count(lit(1)).as("n_nodes"),
         sum(col("seed")).as("n_seeds"))
-      var r = nodes.select(col("u"), lit(1000000L).as("rank"))
-      for (_ <- 1 to PprIters) {
+      def step(r: DataFrame): DataFrame = {
         val contrib = ce.join(r.withColumnRenamed("u", "src"), "src")
           .groupBy(col("dst"))
           .agg(sum(expr("rank div outdeg")).as("c"))
-        r = nodes.join(contrib.withColumnRenamed("dst", "u"),
-            Seq("u"), "left")
+        nodes.join(contrib.withColumnRenamed("dst", "u"), Seq("u"), "left")
           .crossJoin(broadcast(counts))
           .select(col("u"),
             (col("seed") * expr("(150000 * n_nodes) div n_seeds")
               + expr("(850000 * coalesce(c, 0)) div 1000000"))
               .as("rank"))
-          // lazy (round 16): the rounds chain linearly into the final
-          // action (see q_graph_pagerank).
-          .duckCkptLazy()
       }
-      r.orderBy("u")
-    }),
+      var r = step(nodes.select(col("u"), lit(1000000L).as("rank")))
+      // lazy (round 16): the rounds chain linearly into rankLoop's eager
+      // checkpoint of the last one (see q_graph_pagerank).
+      for (_ <- 2 to PprIters) r = step(r.duckCkptLazy())
+      r
+    }.orderBy("u")),
 
     // EWMA CONTROL CHART — λ = 1/2 truncated-16 EWMA of daily revenue
     // vs steady-state 3σ limits; emits the violating days.

@@ -67,29 +67,29 @@ object Extras14 {
     // makes the result invariant to the batch split — the same
     // discipline as q_stream_live_stateful. The tombstone filter runs
     // at the END so a delete arriving in any batch wins iff it is the
-    // key's last record, exactly the batch oracle's semantics.
+    // key's last record, exactly the batch oracle's semantics. "Latest"
+    // is a max over a total order, so each input partition first keeps
+    // only its latest record per user and only those cross the state
+    // shuffle.
     "q_stream_live_cdc" -> ((s, d) => {
       import s.implicits._
-      val latest = StreamOps.narrow[CdcEvent](StreamOps.eventsFileStream(s, d))
+      def later(a: CdcLatest, b: CdcLatest): CdcLatest =
+        if (a.us > b.us || (a.us == b.us && a.event_id >= b.event_id)) a
+        else b
+      val latest = StreamOps.combinePartials(
+          StreamOps.narrow[CdcEvent](StreamOps.eventsFileStream(s, d)))(
+          _.user_id,
+          e => CdcLatest(e.user_id,
+            e.ts.getTime * 1000L + (e.ts.getNanos / 1000L) % 1000L,
+            e.event_id, e.event_type, StreamOps.cents(e.value)),
+          later)
         .groupByKey(_.user_id)
         .flatMapGroupsWithState[CdcLatest, CdcLatest](
           OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
-          (uid: Long, events: Iterator[CdcEvent], state: GroupState[CdcLatest]) =>
-            def rec(e: CdcEvent): CdcLatest = CdcLatest(uid,
-              e.ts.getTime * 1000L + (e.ts.getNanos / 1000L) % 1000L,
-              e.event_id, e.event_type,
-              new java.math.BigDecimal(e.value)
-                .setScale(2, java.math.RoundingMode.HALF_UP)
-                .unscaledValue().longValueExact())
-            val cur = events.map(rec).foldLeft(state.getOption) {
-              (acc, r) => acc match {
-                case Some(p) if p.us > r.us
-                  || (p.us == r.us && p.event_id >= r.event_id) => acc
-                case _ => Some(r)
-              }
-            }
-            cur.foreach(state.update)
-            cur.iterator
+          (_: Long, parts: Iterator[CdcLatest], state: GroupState[CdcLatest]) =>
+            val next = (state.getOption.iterator ++ parts).reduce(later)
+            state.update(next)
+            Iterator(next)
         }
       StreamOps.runToMemoryUpdate(latest.toDF(), "live_cdc")
         .groupBy(col("user_id"))

@@ -161,7 +161,10 @@ object Extras20 {
     // BOTH engines emit exactly the sessions with end_us < max_ts −
     // 40 min (the louter/file-sink holdback pattern, applied uniformly).
     // Events are sorted (ts, event_id) inside the group buffer, making
-    // session assembly iterator-order-free.
+    // session assembly iterator-order-free. Unlike the fold-state live
+    // keys this one is not combined before its shuffle: a session gap
+    // is decided between neighbouring timestamps, so the state needs
+    // every event's ts, and no per-partition partial is smaller.
     "q_stream_live_timeout" -> ((s, d) => {
       import s.implicits._
       val ds = graft.streaming.StreamOps.narrow[SessEvent](

@@ -59,31 +59,29 @@ object Extras66 {
     // div/// agree). Each round is one join (scores onto edges by src)
     // + one groupBy dst + a broadcast 1-row max — the distributed
     // power-iteration shape where only the (node, score) relation
-    // moves; the edge relation is built once and localCheckpoint'd.
-    "q_graph_eigencentrality" -> ((s, d) => {
-      val und = Extras11.undirectedEdges(s, d)
-      val edges = und.select(col("a").as("src"), col("b").as("dst"))
-        .unionByName(und.select(col("b").as("src"), col("a").as("dst")))
-        .duckCkpt()
-      var r = edges.select(col("src").as("u")).distinct()
-        .select(col("u"), lit(1000000L).as("sc"))
-      for (_ <- 1 to EigenIters) {
-        val raw = edges.join(r.withColumnRenamed("u", "src"), "src")
+    // moves: Extras11.rankLoop builds the edge relation once, keeps it
+    // persisted and partitioned by src across rounds, and releases it
+    // once the last round is materialised.
+    "q_graph_eigencentrality" -> ((s, d) => Extras11.rankLoop(s, d) { ce =>
+      def step(r: DataFrame): DataFrame = {
+        val raw = ce.join(r.withColumnRenamed("u", "src"), "src")
           .groupBy(col("dst"))
           .agg(sum(col("sc")).as("raw"))
         val mx = raw.agg(max(col("raw")).as("mx"))
         // ×1e6 in DECIMAL(38,0): raw ≤ deg_max·1e6 and a 1e7-degree hub
         // would overflow the BIGINT product (HUGEINT on the oracle side)
-        r = raw.crossJoin(broadcast(mx))
+        raw.crossJoin(broadcast(mx))
           .select(col("dst").as("u"),
             expr("""CAST(CAST(raw AS DECIMAL(38,0)) * 1000000 div mx
                     AS BIGINT)""").as("sc"))
-          // lazy (round 16): each round's mx-broadcast job materializes
-          // the previous round's blocks; the eager job was redundant.
-          .duckCkptLazy()
       }
-      r.orderBy("u")
-    }),
+      var r = step(ce.select(col("src").as("u")).distinct()
+        .select(col("u"), lit(1000000L).as("sc")))
+      // lazy (round 16): each round's mx-broadcast job materializes
+      // the previous round's blocks; the eager job was redundant.
+      for (_ <- 2 to EigenIters) r = step(r.duckCkptLazy())
+      r
+    }.orderBy("u")),
 
     // EMBEDDING PC1 — dominant eigenvector of the 16×16 covariance of
     // the first 16 embedding dims (the q_llm_embed_cov matrix, mirrored

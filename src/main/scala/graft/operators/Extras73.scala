@@ -38,6 +38,25 @@ object Extras73 {
 
   private val KmvK = 64
 
+  /** Two KMV sketches of one event type merged: the KmvK smallest distinct
+    * hashes of both (each sorted ascending and distinct, and so is the
+    * result) and the summed row counters. Associative and commutative, so
+    * the per-partition combine and the state fold may meet partials in any
+    * grouping and order. */
+  private def kmvMerge(a: KmvSketchState, b: KmvSketchState): KmvSketchState = {
+    val (x, y) = (a.hashes, b.hashes)
+    val out = Array.newBuilder[Long]
+    var (i, j, n) = (0, 0, 0)
+    while (n < KmvK && (i < x.length || j < y.length)) {
+      val h = if (j == y.length || (i < x.length && x(i) <= y(j))) x(i) else y(j)
+      if (i < x.length && x(i) == h) i += 1
+      if (j < y.length && y(j) == h) j += 1
+      out += h
+      n += 1
+    }
+    KmvSketchState(a.event_type, out.result(), a.n_proc + b.n_proc)
+  }
+
   /** JVM twin of Det.md5long — same first-15-hex-chars construction. */
   private def md5longJvm(s: String): Long = {
     val dig = java.security.MessageDigest.getInstance("MD5")
@@ -132,29 +151,24 @@ object Extras73 {
     // Update-mode emits the running sketch each micro-batch; the final
     // max_by(n_proc) collapse makes the result batch-split-invariant.
     // Estimate rule shared with the oracle: n_s < k → the sample IS
-    // the distinct set (exact); else (k−1)·2^60/h_k.
+    // the distinct set (exact); else (k−1)·2^60/h_k. Sketches merge
+    // (kmvMerge), so each input partition first folds its events into
+    // one sketch per event type and the state merges those.
     "q_stream_live_kmv" -> ((s, d) => {
       import s.implicits._
-      val sketched =
-        StreamOps.narrow[TypeUser](StreamOps.eventsFileStream(s, d))
+      val sketched = StreamOps.combinePartials(
+          StreamOps.narrow[TypeUser](StreamOps.eventsFileStream(s, d)))(
+          _.event_type,
+          e => KmvSketchState(e.event_type,
+            Array(md5longJvm(e.user_id.toString)), 1L),
+          kmvMerge)
         .groupByKey(_.event_type)
         .flatMapGroupsWithState[KmvSketchState, KmvSketchState](
           OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
-          (et: String, events: Iterator[TypeUser],
+          (et: String, parts: Iterator[KmvSketchState],
            state: GroupState[KmvSketchState]) =>
-            val prev = state.getOption
-              .getOrElse(KmvSketchState(et, Array.empty[Long], 0L))
-            var n = prev.n_proc
-            val merged = scala.collection.mutable.TreeSet.empty[Long]
-            merged ++= prev.hashes
-            events.foreach { e =>
-              n += 1
-              val h = md5longJvm(e.user_id.toString)
-              if (merged.size < KmvK) merged += h
-              else if (h < merged.last) { merged += h
-                if (merged.size > KmvK) merged -= merged.last }
-            }
-            val next = KmvSketchState(et, merged.toArray.take(KmvK), n)
+            val next = parts.foldLeft(state.getOption
+              .getOrElse(KmvSketchState(et, Array.empty[Long], 0L)))(kmvMerge)
             state.update(next)
             Iterator(next)
         }

@@ -41,7 +41,8 @@ object Extras8 {
     // the final state per user whatever the batch split, so the result
     // equals the batch GROUP BY the oracle states. State is sharded by
     // user_id across state-store partitions — no global state, the
-    // 100 TB shape.
+    // 100 TB shape — and each input partition combines its events into
+    // one (count, cents) partial per user before the state shuffle.
     "q_stream_live_stateful" -> ((s, d) => {
       import s.implicits._
       val run = StreamOps.runningPerUserCents(
@@ -187,7 +188,8 @@ object Extras8 {
     // (no float arithmetic), so every emission is an exact input value
     // and the per-user max of emissions equals the batch MAX whatever the
     // micro-batch split. transformWithState requires the RocksDB
-    // provider, which runToMemoryUpdate pins for the run.
+    // provider, which runToMemoryUpdate pins for the run. Each input
+    // partition combines its events into one max per user first.
     "q_stream_live_tws" -> ((s, d) => {
       import s.implicits._
       val run = StreamOps.runningMax(

@@ -1,9 +1,12 @@
 package graft.streaming
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
   StatefulProcessor, TimeMode, TTLConfig, ValueState}
+
 import graft.Det
 
 /** Event shape shared by the streaming suites and the batch twins —
@@ -132,10 +135,47 @@ object StreamOps {
     * state shuffle (groupByKey → flatMapGroupsWithState or
     * transformWithState) carries every column of its input row, read by
     * the state function or not; narrowing first keeps the rest (the props
-    * JSON above all) out of the exchange and the state. */
+    * JSON above all) out of the exchange and the state. Where the state is
+    * a fold, `combinePartials` then cuts the rows themselves to one
+    * partial per key per input partition. */
   def narrow[T: Encoder](ds: Dataset[_]): Dataset[T] =
     ds.select(implicitly[Encoder[T]].schema.fieldNames.toSeq.map(col(_)): _*)
       .as[T]
+
+  /** Most keys one input partition's combiner holds before it flushes its
+    * partials downstream: the combiner's memory is bounded on any split,
+    * whatever the key cardinality, at the cost of one more partial per
+    * key per flush. */
+  val CombineKeyCap: Int = 1 << 14
+
+  /** `ds` folded to one partial per key per input partition: each row is
+    * lifted to a partial and merged into its key's partial, in a hash map
+    * that is flushed downstream whenever it holds `cap` keys. This is the
+    * map-side combine of reduceByKey (the D-Streams form of streaming
+    * state) for a typed state shuffle: the exchange carries partials, not
+    * rows. `merge` must be associative and commutative, and the state
+    * function must fold partials with the same `merge`, so the state is
+    * the same whatever the split, the flushes and the arrival order. */
+  def combinePartials[T, K, P: Encoder](ds: Dataset[T],
+      cap: Int = CombineKeyCap)(key: T => K, lift: T => P,
+      merge: (P, P) => P): Dataset[P] =
+    ds.mapPartitions { rows =>
+      Iterator.continually {
+        val acc = new java.util.HashMap[K, P]
+        while (rows.hasNext && acc.size < cap) {
+          val r = rows.next()
+          acc.merge(key(r), lift(r), (a: P, b: P) => merge(a, b))
+        }
+        acc.values.asScala
+      }.takeWhile(_.nonEmpty).flatten
+    }
+
+  /** An event value in exact cents: the HALF_UP 2-dp decimal rule of
+    * Det.dec (Spark's double→DECIMAL(18,2) cast), applied per event. */
+  def cents(value: Double): Long =
+    new java.math.BigDecimal(value)
+      .setScale(2, java.math.RoundingMode.HALF_UP)
+      .unscaledValue().longValueExact()
 
   private def runSink(df: DataFrame, name: String, mode: String): DataFrame =
     withStatePartitions(df) {
@@ -211,27 +251,24 @@ object StreamOps {
   }
 
   /** The graded variant of runningPerUser: per-user running (count, exact
-    * cents). Each event's value converts through the SAME HALF_UP 2-dp
-    * decimal rule as Det.dec (Spark's double→DECIMAL(18,2) cast), so the
-    * long total equals the batch oracle's SUM(decimal*100) regardless of
-    * the order events drain from the group iterator. */
+    * cents). Each event's value converts through `cents`, so the long
+    * total equals the batch oracle's SUM(decimal*100) regardless of the
+    * order events drain from the group iterator. Count and cents are
+    * sums, so each input partition first combines its events into one
+    * (n, cents) partial per user and the state adds partials. */
   def runningPerUserCents(ds: Dataset[Event]): Dataset[UserRunningCents] = {
     import ds.sparkSession.implicits._
-    narrow[UserValue](ds).groupByKey(_.user_id)
+    def add(a: UserRunningCents, b: UserRunningCents) =
+      UserRunningCents(a.user_id, a.n_events + b.n_events, a.cents + b.cents)
+    combinePartials(narrow[UserValue](ds))(_.user_id,
+        e => UserRunningCents(e.user_id, 1L, cents(e.value)), add)
+      .groupByKey(_.user_id)
       .flatMapGroupsWithState[UserRunningCents, UserRunningCents](
         OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
-        (uid: Long, events: Iterator[UserValue],
+        (uid: Long, parts: Iterator[UserRunningCents],
          state: GroupState[UserRunningCents]) =>
-          val prev = state.getOption.getOrElse(UserRunningCents(uid, 0L, 0L))
-          var n = prev.n_events
-          var c = prev.cents
-          events.foreach { e =>
-            n += 1
-            c += new java.math.BigDecimal(e.value)
-              .setScale(2, java.math.RoundingMode.HALF_UP)
-              .unscaledValue().longValueExact()
-          }
-          val next = UserRunningCents(uid, n, c)
+          val next = parts.foldLeft(
+            state.getOption.getOrElse(UserRunningCents(uid, 0L, 0L)))(add)
           state.update(next)
           Iterator(next)
       }
@@ -255,10 +292,14 @@ object StreamOps {
     }
   }
 
-  /** Per-user running max via transformWithState. */
+  /** Per-user running max via transformWithState. Max is a fold, so each
+    * input partition first combines its events into one per-user max. */
   def runningMax(ds: Dataset[Event]): Dataset[(Long, Double)] = {
     import ds.sparkSession.implicits._
-    narrow[UserValue](ds).groupByKey(_.user_id)
+    combinePartials(narrow[UserValue](ds))(_.user_id, identity[UserValue],
+        (a: UserValue, b: UserValue) =>
+          UserValue(a.user_id, math.max(a.value, b.value)))
+      .groupByKey(_.user_id)
       .transformWithState(new MaxValueProcessor,
         TimeMode.None(), OutputMode.Update())
   }

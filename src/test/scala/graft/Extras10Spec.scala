@@ -1,17 +1,8 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.sql.catalyst.plans.logical.Range
-import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
-  LogicalRelation}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
-import org.scalatest.concurrent.Eventually._
-import org.scalatest.time.SpanSugar._
 
-class Extras10Spec extends QuerySuiteBase {
+class Extras10Spec extends QuerySuiteBase with ExecutionCapture {
   Seq("q_llm_kmeans_iter", "q_graph_pagerank",
     "q_fn_editdist", "q_evt_funnel").foreach(checkDeclared(_))
 
@@ -55,42 +46,11 @@ class Extras10Spec extends QuerySuiteBase {
   }
 
   test("pagerank: one execution per run scans events") {
-    // Round 1 starts from the checkpointed edge list, so the graph is
-    // built once: the checkpoint's execution is the only one that reads
-    // events, and the rounds and the final action read the checkpoint.
-    val scans = new AtomicInteger
-    @volatile var lastRange = -1L
-    val listener = new QueryExecutionListener {
-      def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit = {
-        if (qe.optimizedPlan.exists {
-              case l: LogicalRelation => l.relation match {
-                case fs: HadoopFsRelation =>
-                  fs.location.rootPaths.exists(_.getName == "events.parquet")
-                case _ => false
-              }
-              case _ => false
-            }) scans.incrementAndGet()
-        qe.analyzed.foreach {
-          case r: Range => lastRange = r.start
-          case _ =>
-        }
-      }
-      def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    // Listener calls arrive asynchronously and in order: a marker query's
-    // arrival means every earlier execution has been counted.
-    def drain(marker: Long): Unit = {
-      spark.range(marker, marker + 1).collect()
-      eventually(timeout(60.seconds))(assert(lastRange == marker))
-    }
-    spark.listenerManager.register(listener)
-    try {
-      drain(424242L)
-      scans.set(0)
-      q("q_graph_pagerank").collect()
-      drain(424243L)
-      assert(scans.get == 1, s"${scans.get} executions scanned events")
-    } finally spark.listenerManager.unregister(listener)
+    // The graph is built once, into the edge relation every round reads:
+    // one scan of events reads rows, in whichever execution materialises
+    // that relation, and the rounds and the final action read it.
+    val scans = eventScans(executionsOf(q("q_graph_pagerank").collect()))
+    assert(scans == 1, s"$scans scans of events read rows")
   }
 
   test("shingle posting cache path == inline kernel path") {

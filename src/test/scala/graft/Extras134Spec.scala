@@ -1,6 +1,6 @@
 package graft
 
-class Extras134Spec extends QuerySuiteBase {
+class Extras134Spec extends QuerySuiteBase with ExecutionCapture {
   Seq("q_graph_ppr", "q_ts_ewma_chart", "q_evt_repeat_rate")
     .foreach(checkDeclared(_))
 
@@ -13,6 +13,13 @@ class Extras134Spec extends QuerySuiteBase {
       val rAvg = rest.map(_.getLong(1)).sum.toDouble / rest.length
       assert(sAvg > rAvg)
     }
+  }
+
+  test("ppr: one execution per run scans events") {
+    // The node set is derived from the edge relation, so the graph is
+    // built (events scanned) once per run, as in q_graph_pagerank.
+    val scans = eventScans(executionsOf(q("q_graph_ppr").collect()))
+    assert(scans == 1, s"$scans scans of events read rows")
   }
 
   test("ewma chart: violations sit outside the band") {
