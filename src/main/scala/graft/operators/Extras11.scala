@@ -45,9 +45,9 @@ object Extras11 {
     * as (src, dst, outdeg) edges and returns its last round, materialised.
     *
     * The edges are hash-partitioned by src once, the out-degrees are
-    * counted and joined inside those partitions, and the relation is
-    * persisted, so every round's join by src moves only the (node, rank)
-    * side: a persisted plan keeps its partitioning, where a local
+    * counted inside those partitions (a window, so the partitioned edges
+    * are read once), and the relation is persisted, so every round's
+    * join by src moves only the (node, rank) side: a persisted plan keeps its partitioning, where a local
     * checkpoint's rescan reads as unpartitioned and would shuffle the
     * whole edge list again each round. The last round is checkpointed
     * eagerly and the edges are unpersisted before this returns, so the
