@@ -40,7 +40,7 @@ object Extras11 {
       .distinct()
   }
 
-  /** The rank loops' driver (PageRank, personalised PageRank,
+  /** The rank loops' kernel (PageRank, personalised PageRank,
     * eigenvector centrality): runs `loop` over the symmetric % 7 graph
     * as (src, dst, outdeg) edges and returns its last round, materialised.
     *
