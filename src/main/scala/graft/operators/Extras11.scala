@@ -47,9 +47,10 @@ object Extras11 {
     * The edges are hash-partitioned by src once, the out-degrees are
     * counted inside those partitions (a window, so the partitioned edges
     * are read once), and the relation is persisted, so every round's
-    * join by src moves only the (node, rank) side: a persisted plan keeps its partitioning, where a local
-    * checkpoint's rescan reads as unpartitioned and would shuffle the
-    * whole edge list again each round. The last round is checkpointed
+    * join by src moves only the (node, rank) side: a persisted plan
+    * keeps its partitioning, where a local checkpoint's rescan reads as
+    * unpartitioned and would shuffle the whole edge list again each
+    * round. The last round is checkpointed
     * eagerly and the edges are unpersisted before this returns, so the
     * cache lives inside one invocation and the result reads none of it. */
   private[operators] def rankLoop(s: SparkSession, d: String)(
