@@ -217,10 +217,15 @@ object SparkEntry {
     * function first installs DuckCast's optimizer rule on its session
     * (idempotent), so every decimal→double emission the key plans —
     * final frame, checkpoints, streaming micro-batches — carries
-    * DuckDB's exact conversion at ANY magnitude (see DuckCast). */
+    * DuckDB's exact conversion at ANY magnitude (see DuckCast). It then
+    * builds the key's frame in one Fixpoint scope, which releases the
+    * checkpoints the frame no longer reads. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     families.iterator.map(_._1).reduce(_ ++ _).map { case (k, f) =>
-      k -> ((s: SparkSession, d: String) => { DuckCast.install(s); f(s, d) })
+      k -> ((s: SparkSession, d: String) => {
+        DuckCast.install(s)
+        Fixpoint.scoped(f(s, d))
+      })
     }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on

@@ -18,36 +18,16 @@ import org.apache.spark.sql.functions._
   *    Dataset.unpersist CASCADES to dependent cache entries, so each
   *    round silently uncached its successor and every job recomputed the
   *    full edge lineage from the source (observed: 30 s/round and an
-  *    8 GB heap OOM on a 2 187-edge graph). Rounds now localCheckpoint
-  *    instead — lineage depth stays 1, old checkpoint blocks are freed by
-  *    the ContextCleaner once the loop drops the reference.
+  *    8 GB heap OOM on a 2 187-edge graph). Rounds are Fixpoint cuts
+  *    instead — lineage depth stays 1.
   *
   * Convergence check without a per-round join: labels only ever DECREASE
   * (next = min of monotone inputs), so the label sum strictly decreases
-  * iff any label changed — one scalar aggregate per round, which doubles
-  * as the action that materializes the round's checkpoint.
+  * iff any label changed — one scalar aggregate per round (with the
+  * node count, so a pair-free input stops at its empty seed), which is
+  * the round's measure and so materializes it.
   */
 object Components {
-
-  /** Pin a round's result at lineage depth 1. localCheckpoint stores
-    * blocks on executors — fast, but on a real cluster an executor loss
-    * mid-loop kills the query. When the session has a RELIABLE checkpoint
-    * dir configured (sparkContext.setCheckpointDir, typically HDFS/object
-    * storage), use checkpoint(eager=true) instead: rounds then survive
-    * executor loss, the right trade at 100 TB where a components loop can
-    * run for many rounds over hours. Local mode and the bench have no
-    * checkpoint dir set and keep the fast path. */
-  private def pin(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-      df.checkpoint()
-    else
-      // Lazy on the local path (round 16): every pin is immediately
-      // followed by sumOf's scalar aggregate — THAT action materializes
-      // the round's blocks (exactly as the round-pinning doc above
-      // intended); the eager form paid one extra job per round. The
-      // reliable-checkpoint branch stays eager: a cluster round must be
-      // durable before the loop builds on it.
-      df.duckCkptLazy()
 
   /** @param pairs undirected edges as (a, b) long columns (any names,
     *              positional); returns (id, lbl) with lbl = component min. */
@@ -59,49 +39,47 @@ object Components {
       .persist()
     // Seed with min(self, neighbors) — the same shuffle a distinct-ids
     // init would cost, but it IS the first propagation round.
-    var labels = pin(edges
+    val seed = edges
       .groupBy(col("ea").as("id"))
       .agg(min(col("eb")).as("mnb"))
-      .select(col("id"), least(col("id"), col("mnb")).as("lbl")))
-    // coalesce: sum over an EMPTY label frame is NULL (a pair-free input
-    // must yield an empty result, not an NPE).
-    def sumOf(df: DataFrame): Long =
-      df.agg(coalesce(sum(col("lbl")), lit(0L))).head().getLong(0)
-    var lblSum = sumOf(labels)
-    var changed = true
-    while (changed) {
-      // Round 17: THREE chained pointer jumps per round (the composed
-      // map lbl⁴) instead of one — the embedding near-dup graph showed
-      // 10 propagation rounds at ~0.25 s of fixed job/exchange floor
-      // each; deeper in-round composition cuts rounds to
-      // ~log₄(chain) for three extra LABELS-SIZED joins inside the SAME
-      // job, which is far cheaper than extra rounds. (SEVEN jumps was
-      // A/B'd and REVERTED: rounds didn't fall further and the 8-deep
-      // join tree blew up planning/codegen nonlinearly — the last round
-      // took 76 s.) Every composed
-      // label is still a same-component node id ≥ the component min, so
-      // the fixpoint (and the sum-unchanged termination test) is
-      // untouched; jmp ≤ labels pointwise over the same id set, so the
-      // old `labels ∪ …` union leg is subsumed by jmp.
-      var jmp = labels
-      for (_ <- 1 to 3) {
-        jmp = jmp.as("x")
-          .join(labels.select(col("id").as("jid"), col("lbl").as("jlbl")),
-            col("x.lbl") === col("jid"))
-          .select(col("x.id").as("id"), col("jlbl").as("lbl"))
+      .select(col("id"), least(col("id"), col("mnb")).as("lbl"))
+    // (nodes, label sum); coalesce: the sum over no labels is NULL
+    def measure(df: DataFrame): (Long, Long) = {
+      val r = df.agg(count(lit(1)), coalesce(sum(col("lbl")), lit(0L))).head()
+      (r.getLong(0), r.getLong(1))
+    }
+    val rounds = Fixpoint.converge(seed, measure) { rs =>
+      val labels = rs.last
+      if (labels.measure._1 == 0 ||
+          rs.size > 1 && labels.measure == rs(rs.size - 2).measure) None
+      else {
+        // Round 17: THREE chained pointer jumps per round (the composed
+        // map lbl⁴) instead of one — the embedding near-dup graph showed
+        // 10 propagation rounds at ~0.25 s of fixed job/exchange floor
+        // each; deeper in-round composition cuts rounds to
+        // ~log₄(chain) for three extra LABELS-SIZED joins inside the SAME
+        // job, which is far cheaper than extra rounds. (SEVEN jumps was
+        // A/B'd and REVERTED: rounds didn't fall further and the 8-deep
+        // join tree blew up planning/codegen nonlinearly — the last round
+        // took 76 s.) Every composed
+        // label is still a same-component node id ≥ the component min, so
+        // the fixpoint (and the sum-unchanged termination test) is
+        // untouched; jmp ≤ labels pointwise over the same id set, so the
+        // old `labels ∪ …` union leg is subsumed by jmp.
+        val jmp = (1 to 3).foldLeft(labels.df) { (j, _) =>
+          j.as("x")
+            .join(labels.df.select(col("id").as("jid"), col("lbl").as("jlbl")),
+              col("x.lbl") === col("jid"))
+            .select(col("x.id").as("id"), col("jlbl").as("lbl"))
+        }
+        val prop = edges
+          .join(jmp, edges("ea") === jmp("id"))
+          .select(col("eb").as("id"), col("lbl"))
+        Some(jmp.unionByName(prop)
+          .groupBy(col("id")).agg(min(col("lbl")).as("lbl")))
       }
-      val prop = edges
-        .join(jmp, edges("ea") === jmp("id"))
-        .select(col("eb").as("id"), col("lbl"))
-      val next = pin(jmp
-        .unionByName(prop)
-        .groupBy(col("id")).agg(min(col("lbl")).as("lbl")))
-      val nextSum = sumOf(next)
-      changed = nextSum != lblSum
-      lblSum = nextSum
-      labels = next
     }
     edges.unpersist()
-    labels
+    rounds.last.df
   }
 }

@@ -128,14 +128,10 @@ object Extras10 {
         .select(col("dst").as("u"),
           expr("CAST(150000 + (850000 * contrib) div 1000000 AS BIGINT)")
             .as("rank"))
-      var r = step(ce.withColumn("rank", lit(1000000L)))
-      // lazy (round 16): the rounds chain linearly into rankLoop's eager
-      // checkpoint of the last one — each marked checkpoint
-      // materializes inside that one job instead of paying a dedicated
-      // job per round.
-      for (_ <- 2 to PageRankIters)
-        r = step(ce.join(r.duckCkptLazy().withColumnRenamed("u", "src"), "src"))
-      r
+      Fixpoint.rounds(step(ce.withColumn("rank", lit(1000000L))),
+          PageRankIters - 1) { r =>
+        step(ce.join(r.withColumnRenamed("u", "src"), "src"))
+      }.last
     }.orderBy("u")),
 
     // EDIT-DISTANCE scalar family — levenshtein over derived string pairs

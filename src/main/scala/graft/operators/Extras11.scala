@@ -40,9 +40,34 @@ object Extras11 {
       .distinct()
   }
 
+  /** The graph as (src, dst) arcs, both directions of every
+    * undirectedEdges pair. */
+  private[operators] def symmetricEdges(s: SparkSession, d: String,
+      mod: Long = 7L): DataFrame = {
+    val und = undirectedEdges(s, d, mod)
+    und.select(col("a").as("src"), col("b").as("dst"))
+      .unionByName(und.select(col("b").as("src"), col("a").as("dst")))
+  }
+
+  /** Minimum-hop labels (u, h) of every node within `hops` hops of
+    * `seed` (u) over the arcs `e` (src, dst): each round expands the
+    * last frontier, drops the nodes already labelled, and the loop
+    * stops when a frontier is empty or at the hop bound. */
+  private[operators] def bfs(e: DataFrame, seed: DataFrame, hops: Int)
+      : DataFrame =
+    Fixpoint.bounded(seed.select(col("u"), lit(0).as("h")), hops,
+        Fixpoint.rows) { rs =>
+      if (rs.last.measure == 0) None
+      else Some(e.join(rs.last.df.select(col("u").as("src")), "src")
+        .select(col("dst").as("u")).distinct()
+        .join(rs.map(_.df).reduce(_ unionByName _), Seq("u"), "left_anti")
+        .select(col("u"), lit(rs.size).as("h")))
+    }.map(_.df).reduce(_ unionByName _)
+
   /** The rank loops' kernel (PageRank, personalised PageRank,
     * eigenvector centrality): runs `loop` over the symmetric % 7 graph
-    * as (src, dst, outdeg) edges and returns its last round, materialised.
+    * as (src, dst, outdeg) edges and returns its result, which must be
+    * materialised (the last of Fixpoint's rounds is).
     *
     * The edges are hash-partitioned by src once, the out-degrees are
     * counted inside those partitions (a window, so the partitioned edges
@@ -50,19 +75,15 @@ object Extras11 {
     * join by src moves only the (node, rank) side: a persisted plan
     * keeps its partitioning, where a local checkpoint's rescan reads as
     * unpartitioned and would shuffle the whole edge list again each
-    * round. The last round is checkpointed
-    * eagerly and the edges are unpersisted before this returns, so the
-    * cache lives inside one invocation and the result reads none of it. */
+    * round. The edges are unpersisted before this returns, so the cache
+    * lives inside one invocation and the result reads none of it. */
   private[operators] def rankLoop(s: SparkSession, d: String)(
       loop: DataFrame => DataFrame): DataFrame = {
-    val und = undirectedEdges(s, d)
-    val edges = und.select(col("a").as("src"), col("b").as("dst"))
-      .unionByName(und.select(col("b").as("src"), col("a").as("dst")))
+    val ce = symmetricEdges(s, d)
       .repartition(s.sessionState.conf.numShufflePartitions, col("src"))
-    val ce = edges
       .withColumn("outdeg", count(lit(1)).over(Window.partitionBy(col("src"))))
       .persist()
-    try loop(ce).duckCkpt() finally ce.unpersist()
+    try loop(ce) finally ce.unpersist()
   }
 
   private[operators] val GraphSql =
@@ -228,31 +249,15 @@ object Extras11 {
     // MULTI-HOP BFS — minimum-hop labels within 3 hops of the seed set
     // (u%35=0) on the same graph: the iterative frontier-expansion
     // kernel (join frontier→edges, dedupe, anti-join visited), each
-    // round localCheckpoint'd exactly like Components/PageRank so
-    // lineage stays constant. At scale the edge relation stays
-    // partitioned by src across rounds and only the frontier — strictly
-    // shrinking — moves. The DuckDB twin is a recursive CTE (UNION
-    // dedup) + MIN(hops).
+    // round a Fixpoint cut like Components/PageRank so lineage stays
+    // constant. At scale the edge relation stays partitioned by src
+    // across rounds and only the frontier — strictly shrinking — moves.
+    // The DuckDB twin is a recursive CTE (UNION dedup) + MIN(hops).
     "q_graph_bfs" -> ((s, d) => {
-      val und = undirectedEdges(s, d)
-      val e = und.select(col("a").as("src"), col("b").as("dst"))
-        .unionByName(und.select(col("b").as("src"), col("a").as("dst")))
-        .duckCkpt()
-      val nodes = e.select(col("src").as("u")).distinct()
-      var res = nodes.where(pmod(col("u"), lit(35L)) === 0)
-        .select(col("u"), lit(0).as("hops")).duckCkpt()
-      var frontier = res
-      for (h <- 1 to 3) {
-        val next = e
-          .join(frontier.select(col("u").as("src")), "src")
-          .select(col("dst").as("u")).distinct()
-          .join(res, Seq("u"), "left_anti")
-          .select(col("u"), lit(h).as("hops"))
-          .duckCkpt()
-        res = res.unionByName(next)
-        frontier = next
-      }
-      res.orderBy("u")
+      val e = symmetricEdges(s, d).duckCkpt()
+      val seed = e.select(col("src").as("u")).distinct()
+        .where(pmod(col("u"), lit(35L)) === 0)
+      bfs(e, seed, 3).select(col("u"), col("h").as("hops")).orderBy("u")
     }),
 
     // LAST-TOUCH ATTRIBUTION — credit each purchase to the user's most

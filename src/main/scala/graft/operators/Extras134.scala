@@ -18,7 +18,7 @@ import graft.{Det, Tables}
   *
   * Scale shape: PPR iterates the integer micro-rank kernel
   * (Extras11.rankLoop: edges persisted and partitioned by src, ranks
-  * localCheckpoint'd per round, the q_graph_pagerank discipline) with
+  * cut per round by Fixpoint, the q_graph_pagerank discipline) with
   * the teleport entering through a LEFT join from the node set so
   * contribution-less seeds persist; ewma_chart rides the 16-day
   * truncated power-of-2 window (the q_ts_ewma kernel) + one exact
@@ -58,11 +58,8 @@ object Extras134 {
               + expr("(850000 * coalesce(c, 0)) div 1000000"))
               .as("rank"))
       }
-      var r = step(nodes.select(col("u"), lit(1000000L).as("rank")))
-      // lazy (round 16): the rounds chain linearly into rankLoop's eager
-      // checkpoint of the last one (see q_graph_pagerank).
-      for (_ <- 2 to PprIters) r = step(r.duckCkptLazy())
-      r
+      Fixpoint.rounds(step(nodes.select(col("u"), lit(1000000L).as("rank"))),
+        PprIters - 1)(step).last
     }.orderBy("u")),
 
     // EWMA CONTROL CHART — λ = 1/2 truncated-16 EWMA of daily revenue

@@ -16,7 +16,7 @@ import graft.{Det, Tables}
   * events pass (per-(hour,type) first-touch chains over the sampled
   * user population); reachability closes by PATH DOUBLING —
   * O(log diameter) rounds, each a (reach ⋈ reach) equi-join, with
-  * per-round localCheckpoint exactly like Components. The closure is
+  * rounds cut by the Fixpoint kernel like Components. The closure is
   * per-SCC quadratic (within an SCC everyone reaches everyone), which
   * is the honest cost of EXACT SCC listing; at 100 TB the production
   * variant peels FW-BW per color so only one pivot's
@@ -69,15 +69,13 @@ object Extras138 {
     * Every pair NEW to r_i∘r_i has at least one factor in
     * Δ = r_i \ r_{i-1} (both-old factors were composed in the previous
     * round), so each round joins only Δ∘r ∪ r∘Δ, anti-joins r away and
-    * unions the DISJOINT remainder: the no-progress confirm round
-    * shrinks to a Δ-sized (eventually empty) join and no round
-    * re-distincts the whole closure. Leg dedup is ADAPTIVE on the
+    * the closure is the union of the DISJOINT rounds: the no-progress
+    * confirm round shrinks to a Δ-sized (eventually empty) join and no
+    * round re-distincts the whole closure. Leg dedup is ADAPTIVE on the
     * incoming Δ's row count (both always-on and never-on were full-
     * bench A/B'd and lost — numbers at the loop). Identical fixpoint:
-    * the union chain accumulates exactly the pairs the naive loop's
-    * distinct kept (leg/except dedup only removes duplicates).
-    * Lazy checkpoints (round 16): each round's count() materializes its
-    * own blocks. */
+    * the union accumulates exactly the pairs the naive loop's distinct
+    * kept (leg/except dedup only removes duplicates). */
   private[graft] def transitiveClosure(edges: DataFrame): DataFrame = {
     val c = edges.columns
     // (Round 17 A/B'd and REVERTED: round-robin repartitioning each
@@ -89,55 +87,49 @@ object Extras138 {
     // the expansion's residual serialism at these byte sizes.)
     // Null-keyed edges reach nothing: dropped at the seed, because the
     // EXCEPT below matches null keys as equal (a left_anti would not).
-    var r = edges.select(col(c(0)).as("s"), col(c(1)).as("t"))
+    val seed = edges.select(col(c(0)).as("s"), col(c(1)).as("t"))
       .where(col("s").isNotNull && col("t").isNotNull)
-      .duckCkptLazy()
-    var delta = r
-    var dn = r.count()
-    var grown = dn > 0
-    while (grown) {
-      // Adaptive leg dedup (§2.2 shuffle fewer bytes — when there ARE
-      // bytes): a doubling round's expansion re-derives each in-SCC
-      // pair ~k× (Σk³ rows), so when the incoming Δ is large, a
-      // per-leg distinct collapses the expansion map-side BEFORE the
-      // anti-join's exchange (full-bench evidence: without it,
-      // scc_dag 2.58 → 4.08 s, scc 2.37 → 2.58 s). When Δ is small
-      // (late/confirm rounds — bowtie's Δ=119 round), the expansion is
-      // Δ-bounded and the two extra aggregate exchanges are pure floor
-      // (bowtie 2.12 → 2.83 s WITH unconditional leg dedup). The
-      // row-count threshold scales with the data, not the host.
-      val dedupLegs = dn > LegDedupMinDelta
-      def leg(df: DataFrame) = if (dedupLegs) df.distinct() else df
-      val r2 = leg(delta.as("a").join(r.as("b"), col("a.t") === col("b.s"))
-          .select(col("a.s").as("s"), col("b.t").as("t")))
-        .unionByName(
-          leg(r.as("a").join(delta.as("b"), col("a.t") === col("b.s"))
-            .select(col("a.s").as("s"), col("b.t").as("t"))))
-      // EXCEPT (distinct anti-join) resolves the shared-lineage plan
-      // cleanly where distinct-above-union + left_anti trips Catalyst's
-      // "key not found: s#…" (re-verified this round with explicit
-      // aliases — still trips; except does not).
-      val nd = r2.except(r).duckCkptLazy()
-      dn = nd.count()
-      if (dn == 0) grown = false
+    Fixpoint.converge(seed, Fixpoint.rows) { rs =>
+      val delta = rs.last
+      if (delta.measure == 0) None
       else {
-        // disjoint by construction (anti-join) — plain union of two
-        // materialized checkpoint RDDs, no re-distinct of the closure
-        r = r.unionByName(nd)
-        delta = nd
+        val r = rs.map(_.df).reduce(_ unionByName _)
+        // Adaptive leg dedup (§2.2 shuffle fewer bytes — when there ARE
+        // bytes): a doubling round's expansion re-derives each in-SCC
+        // pair ~k× (Σk³ rows), so when the incoming Δ is large, a
+        // per-leg distinct collapses the expansion map-side BEFORE the
+        // anti-join's exchange (full-bench evidence: without it,
+        // scc_dag 2.58 → 4.08 s, scc 2.37 → 2.58 s). When Δ is small
+        // (late/confirm rounds — bowtie's Δ=119 round), the expansion is
+        // Δ-bounded and the two extra aggregate exchanges are pure floor
+        // (bowtie 2.12 → 2.83 s WITH unconditional leg dedup). The
+        // row-count threshold scales with the data, not the host.
+        def leg(df: DataFrame) =
+          if (delta.measure > LegDedupMinDelta) df.distinct() else df
+        val r2 = leg(delta.df.as("a").join(r.as("b"), col("a.t") === col("b.s"))
+            .select(col("a.s").as("s"), col("b.t").as("t")))
+          .unionByName(
+            leg(r.as("a").join(delta.df.as("b"), col("a.t") === col("b.s"))
+              .select(col("a.s").as("s"), col("b.t").as("t"))))
+        // EXCEPT (distinct anti-join) resolves the shared-lineage plan
+        // cleanly where distinct-above-union + left_anti trips Catalyst's
+        // "key not found: s#…" (re-verified this round with explicit
+        // aliases — still trips; except does not).
+        Some(r2.except(r))
       }
-    }
-    r
+    }.map(_.df).reduce(_ unionByName _)
   }
 
-  /** SCC label kernel over directedEdges — (u, scc_id) with
-    * scc_id = min over {u} ∪ {v : u ⇝ v ∧ v ⇝ u}. Shared by
-    * q_graph_scc and the condensation op (Extras139). */
-  private[operators] def sccLabels(s: SparkSession, d: String): DataFrame = {
-    val edges = directedEdges(s, d).duckCkptLazy()
-    val nodes = edges.select(col("src").as("u"))
+  /** The nodes (u) of a (src, dst) edge frame. */
+  private[operators] def nodesOf(edges: DataFrame): DataFrame =
+    edges.select(col("src").as("u"))
       .unionByName(edges.select(col("dst").as("u"))).distinct()
-    val r = transitiveClosure(edges)
+
+  /** SCC labels (u, scc_id) of `nodes` from their closure `r` (s, t):
+    * scc_id = min over {u} ∪ {v : u ⇝ v ∧ v ⇝ u}. Shared by
+    * q_graph_scc, the condensation op (Extras139) and q_graph_bowtie. */
+  private[operators] def sccLabels(nodes: DataFrame, r: DataFrame)
+      : DataFrame = {
     val mut = r.as("x").join(r.as("y"),
         col("x.s") === col("y.t") && col("x.t") === col("y.s"))
       .select(col("x.s").as("u"), col("x.t").as("v"))
@@ -145,6 +137,12 @@ object Extras138 {
         Seq("u"), "left")
       .select(col("u"),
         least(col("u"), coalesce(col("mv"), col("u"))).as("scc_id"))
+  }
+
+  /** sccLabels over directedEdges. */
+  private[operators] def sccLabels(s: SparkSession, d: String): DataFrame = {
+    val edges = directedEdges(s, d).duckCkpt()
+    sccLabels(nodesOf(edges), transitiveClosure(edges))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -132,18 +132,7 @@ object Extras142 {
     // MAX-CORE DENSITY — edge density of the subgraph surviving the
     // shared 3-round 2-core peel: the dense-region readout.
     "q_graph_core_density" -> ((s, d) => {
-      val und = Extras11.undirectedEdges(s, d)
-      var e = und.select(col("a").as("src"), col("b").as("dst"))
-        .unionByName(und.select(col("b").as("src"), col("a").as("dst")))
-        .duckCkpt()
-      for (_ <- 1 to 3) {
-        val keep = e.groupBy(col("src").as("u")).agg(count(lit(1)).as("c"))
-          .where(col("c") >= 2).select(col("u"))
-        e = e.join(keep.withColumnRenamed("u", "src"), Seq("src"), "semi")
-          .join(keep.withColumnRenamed("u", "dst"), Seq("dst"), "semi")
-          .select(col("src"), col("dst"))
-          .duckCkpt()
-      }
+      val e = Extras17.kcore(Extras11.symmetricEdges(s, d), 2L)
       e.agg(countDistinct(col("src")).as("n_nodes"),
           (count(lit(1)) / 2).cast("long").as("n_edges"))
         .select(col("n_nodes"), col("n_edges"),

@@ -119,30 +119,23 @@ object Extras147 {
     // O(log n) rounds at any scale, never vertex-at-a-time).
     "q_graph_densest" -> ((s, d) => {
       import s.implicits._
-      val und = Extras11.undirectedEdges(s, d)
-      // lazy loop checkpoints (round 16): each round's 1-row head()
-      // materializes the round's blocks before `keep` fans out over them.
-      var e = und.select(col("a").as("src"), col("b").as("dst"))
-        .unionByName(und.select(col("b").as("src"), col("a").as("dst")))
-        .duckCkptLazy()
-      val stats = scala.collection.mutable.ArrayBuffer[(Long, Long, Long)]()
-      for (r <- 0L to 5L) {
-        // 1-row bounded aggregate per round (≤6 driver reads total)
+      // each round's (nodes, arcs) is its measure: a 1-row bounded
+      // aggregate (≤ 6 driver reads) that also gates the next peel
+      def measure(e: DataFrame): (Long, Long) = {
         val row = e.agg(countDistinct(col("src")).as("n"),
           count(lit(1)).as("m")).head()
-        val (n, m) = (row.getLong(0), row.getLong(1))
-        if (n > 0) stats += ((r, n, m / 2))
-        if (r < 5 && n > 0) {
-          val keep = e.groupBy(col("src").as("u"))
-            .agg(count(lit(1)).as("deg"))
-            .where(col("deg") * n > m).select(col("u"))
-          e = e.join(keep.withColumnRenamed("u", "src"), Seq("src"), "semi")
-            .join(keep.withColumnRenamed("u", "dst"), Seq("dst"), "semi")
-            .select(col("src"), col("dst"))
-            .duckCkptLazy()
-        }
+        (row.getLong(0), row.getLong(1))
       }
-      stats.toSeq.toDF("round", "n_nodes", "n_edges")
+      val rounds = Fixpoint.bounded(Extras11.symmetricEdges(s, d), 5,
+          measure) { rs =>
+        val (n, m) = rs.last.measure
+        if (n == 0) None
+        else Some(Extras17.peel(rs.last.df)(_ * n > m))
+      }
+      val stats = rounds.zipWithIndex.collect {
+        case (Fixpoint.Round(_, (n, m)), r) if n > 0 => (r.toLong, n, m / 2)
+      }
+      stats.toDF("round", "n_nodes", "n_edges")
         .select(col("round"), col("n_nodes"), col("n_edges"),
           r6(col("n_edges").cast("double")
             / col("n_nodes").cast("double")).as("density"))

@@ -519,15 +519,15 @@ object Extras148 {
     val qp = vpack.where(col("vec_id").between(0, 3))
       .select(col("vec_id").as("qid"), col("v").as("qv"))
       .duckCkpt()
-    // beam rounds: ONE state relation (qid, vec_id, dd, exp) and ONE
-    // checkpoint per round (all rows ≤ 4·(B·9·rounds) — the
+    // beam rounds: ONE state relation (qid, vec_id, dd, exp), one
+    // Fixpoint round each (all rows ≤ 4·(B·9·rounds) — the
     // densest-subgraph driver-loop convention; the three-relation
     // best/visited/frontier form cost 3 checkpoint actions per round,
     // ~2× the wall-clock, same semantics)
     val bw = Window.partitionBy(col("qid"))
       .orderBy(col("dd"), col("vec_id"))
-    var state = entry(vpack, qp).withColumn("exp", lit(false)).duckCkpt()
-    for (_ <- 1 to rounds) {
+    val state = Fixpoint.rounds(
+        entry(vpack, qp).withColumn("exp", lit(false)), rounds) { state =>
       // frontier = the 16 best not-yet-expanded per query
       val front = state.where(!col("exp"))
         .withColumn("rn", row_number().over(bw))
@@ -537,14 +537,13 @@ object Extras148 {
         .select(col("qid"), col("dst").as("vec_id")).distinct()
         .join(state.select(col("qid"), col("vec_id")),
           Seq("qid", "vec_id"), "left_anti")
-      state = state
+      state
         .join(front.withColumn("f", lit(true)),
           Seq("qid", "vec_id"), "left")
         .select(col("qid"), col("vec_id"), col("dd"),
           (col("exp") || coalesce(col("f"), lit(false))).as("exp"))
         .unionByName(rescore(cand, vpack, qp).withColumn("exp", lit(false)))
-        .duckCkpt()
-    }
+    }.last
     state.where(col("vec_id") =!= col("qid"))
       .withColumn("rank", row_number().over(bw).cast("long"))
       .where(col("rank") <= 10)

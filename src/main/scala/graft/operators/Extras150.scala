@@ -25,14 +25,37 @@ object Extras150 {
   // shared exact whole-dollar daily spine (Extras149 rule: cents²
   // sums overflow BIGINT at probe volumes; dollars give ~2500×
   // headroom with identical truncation on both engines)
-  private def dailyUsd(s: SparkSession, d: String): DataFrame =
+  private[operators] def dailyUsd(s: SparkSession, d: String): DataFrame =
     Tables.orders(s, d)
       .groupBy(to_date(col("o_orderdate")).as("dt"))
       .agg(sum((dec(col("o_totalprice")) * 100).cast("long"))
         .as("vc"))
       .select(col("dt"), expr("vc div 100").as("v"))
 
-  private val DailySql =
+  /** Three ESD rounds over `days` (dt, …, x): each round picks the day
+    * with the largest |n·x − Σx| (exact scaled deviation — no mean
+    * division, no doubles; ties to the earliest date) as (round, dt, …,
+    * dev_num, n), and the next round runs without it. The pick is the
+    * round's measure, cut eagerly because the result reads it too. */
+  private[operators] def esdPicks(days: DataFrame, x: String): DataFrame = {
+    def pick(rem: DataFrame): DataFrame = rem
+      .crossJoin(broadcast(rem.agg(count(lit(1)).as("n"),
+        sum(col(x)).as("sx"))))
+      .withColumn("dev_num", col("n") * col(x) - col("sx"))
+      .withColumn("rn", row_number().over(Window.orderBy(
+        abs(col("dev_num")).desc, col("dt"))))
+      .where(col("rn") === 1)
+      .select((days.columns.map(col) :+ col("dev_num") :+ col("n")): _*)
+      .duckCkpt()
+    Fixpoint.bounded(days, 2, pick) { rs =>
+      Some(rs.last.df.join(rs.last.measure.select(col("dt")), Seq("dt"),
+        "left_anti"))
+    }.zipWithIndex.map { case (r, i) =>
+      r.measure.select((lit(i + 1L).as("round") +: r.measure.columns.map(col)): _*)
+    }.reduce(_ unionByName _)
+  }
+
+  private[operators] val DailySql =
     """daily AS (SELECT CAST(o_orderdate AS DATE) AS dt,
          CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
               AS BIGINT)) // 100 AS BIGINT) AS v
@@ -46,33 +69,17 @@ object Extras150 {
     // density) — the capacity curve of the co-occurrence graph.
     "q_graph_core_decomp" -> ((s, d) => {
       import s.implicits._
-      val und = Extras11.undirectedEdges(s, d)
-      val full = und.select(col("a").as("src"), col("b").as("dst"))
-        .unionByName(und.select(col("b").as("src"), col("a").as("dst")))
-        .duckCkpt()
-      val rows = scala.collection.mutable.ArrayBuffer[(Long, Long, Long)]()
-      for (k <- 1L to 4L) {
-        var e = full
+      val full = Extras11.symmetricEdges(s, d).duckCkpt()
+      val rows = (1L to 4L).map { k =>
         // k=1 peels are identities by construction — every src present
-        // in e has degree ≥ 1, so keep = all nodes and both semi joins
-        // pass every row (round 16: three checkpointed no-op rounds
-        // removed; the k=1 row still reports the full graph exactly as
-        // the 3-round contract states, because the rounds cannot
-        // remove anything at threshold 1).
-        if (k > 1L) for (_ <- 1 to 3) {
-          val keep = e.groupBy(col("src").as("u"))
-            .agg(count(lit(1)).as("c"))
-            .where(col("c") >= k).select(col("u"))
-          e = e.join(keep.withColumnRenamed("u", "src"), Seq("src"), "semi")
-            .join(keep.withColumnRenamed("u", "dst"), Seq("dst"), "semi")
-            .select(col("src"), col("dst"))
-            .duckCkpt()
-        }
+        // in e has degree ≥ 1, so the k=1 row reports the full graph
+        // exactly as the 3-round contract states
+        val e = if (k > 1L) Extras17.kcore(full, k) else full
         val r = e.agg(countDistinct(col("src")).as("n"),
           count(lit(1)).as("m")).head()
-        rows += ((k, r.getLong(0), r.getLong(1) / 2))
+        (k, r.getLong(0), r.getLong(1) / 2)
       }
-      rows.toSeq.toDF("k", "n_nodes", "n_edges")
+      rows.toDF("k", "n_nodes", "n_edges")
         .select(col("k"), col("n_nodes"), col("n_edges"),
           when(col("n_nodes") > 0,
             r6(col("n_edges").cast("double")
@@ -84,27 +91,8 @@ object Extras150 {
     // with the largest |n·v − Σv| (exact scaled deviation — no
     // mean division, no doubles), tie to the earliest date. The
     // bounded-round unrolled form of the generalized ESD sweep.
-    "q_ts_esd_outliers" -> ((s, d) => {
-      var rem = dailyUsd(s, d).duckCkpt()
-      val picks = scala.collection.mutable.ArrayBuffer[DataFrame]()
-      for (r <- 1 to 3) {
-        val tot = rem.agg(count(lit(1)).as("n"), sum(col("v")).as("sv"))
-        val dev = rem.crossJoin(broadcast(tot))
-          .select(col("dt"), col("v"), col("n"),
-            (col("n") * col("v") - col("sv")).as("dev_num"))
-        val top = dev
-          .withColumn("rn", row_number().over(Window.orderBy(
-            abs(col("dev_num")).desc, col("dt"))))
-          .where(col("rn") === 1)
-          .select(lit(r.toLong).as("round"), col("dt"), col("v"),
-            col("dev_num"), col("n"))
-          .duckCkpt()
-        picks += top
-        rem = rem.join(top.select(col("dt")), Seq("dt"), "left_anti")
-          .duckCkpt()
-      }
-      picks.reduce(_ unionByName _).orderBy(col("round"))
-    }),
+    "q_ts_esd_outliers" -> ((s, d) =>
+      esdPicks(dailyUsd(s, d), "v").orderBy(col("round"))),
 
     // DOMINANT PERIOD: argmax over lags 2..60 of the exact
     // integer-demeaned autocovariance Σ r_i·r_{i+L} with

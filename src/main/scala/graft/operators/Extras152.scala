@@ -66,23 +66,21 @@ object Extras152 {
         .agg(min(struct(col("dd"), col("vec_id"))).as("m"))
         .select(col("qid"), col("m.vec_id").as("vec_id"),
           col("m.dd").as("dd"))
-        .duckCkpt()
       Extras148.hnswBeamSearch(s, l0, rounds = 4, entry = (vpack, qp) => {
-        // L2 entry: exact nearest stride-256 node per query
-        var cur = nearest(qp.crossJoin(vpack.where(col("vec_id") % 256 === 0)
-            .select(col("vec_id").as("cand"), col("v").as("vb")))
-          .select(col("qid"), col("cand").as("vec_id"),
-            d2("qv", "vb").as("dd")))
+        // L2 entry: exact nearest stride-256 node per query, then the
         // greedy ef=1 descent: 3 hops, each expands exactly the ONE
         // current node (paper-parity upper search; state is 4 rows)
-        for (_ <- 1 to 3) {
+        Fixpoint.rounds(
+            nearest(qp.crossJoin(vpack.where(col("vec_id") % 256 === 0)
+                .select(col("vec_id").as("cand"), col("v").as("vb")))
+              .select(col("qid"), col("cand").as("vec_id"),
+                d2("qv", "vb").as("dd"))), 3) { cur =>
           val nb = cur.join(edges1, cur("vec_id") === edges1("src"))
             .select(col("qid"), col("dst").as("vec_id"))
-          cur = nearest(rescore(
+          nearest(rescore(
             nb.unionByName(cur.select(col("qid"), col("vec_id"))).distinct(),
             vpack, qp))
-        }
-        cur
+        }.last
       })
     })
   )

@@ -12,7 +12,7 @@ import graft.Tables
   * Scale shape: both graph keys ride the sampled co-occurrence
   * fixtures (Extras11/138) whose closure/BFS kernels are the
   * established scc/bfs conventions — path doubling and frontier
-  * expansion with one localCheckpoint per round, all relations
+  * expansion with one Fixpoint cut per round, all relations
   * bounded by the sampled population; session_window is ONE
   * (user_id) shuffle; kish is a map-side fold.
   *
@@ -42,25 +42,14 @@ object Extras154 {
     // links (OUT candidates), nodes ≡2 (mod 5) only outgoing (IN
     // candidates) — yielding core/in/out at both graded SFs.
     "q_graph_bowtie" -> ((s, d) => {
-      // Lazy loop checkpoints (round 16, the sccLabels note): each
-      // round's count() materializes its own blocks.
       val edges = Extras138.directedEdges(s, d)
         .where(col("src") % 3 =!= 1 && col("dst") % 5 =!= 2)
-        .duckCkptLazy()
-      val nodes = edges.select(col("src").as("u"))
-        .unionByName(edges.select(col("dst").as("u"))).distinct()
-        .duckCkptLazy()
+        .duckCkpt()
+      val nodes = Extras138.nodesOf(edges).duckCkpt()
       // Round 17: shared SEMI-NAIVE doubling kernel (see
       // Extras138.transitiveClosure) — same fixpoint, Δ-sized rounds.
       val r = Extras138.transitiveClosure(edges)
-      val mut = r.as("x").join(r.as("y"),
-          col("x.s") === col("y.t") && col("x.t") === col("y.s"))
-        .select(col("x.s").as("u"), col("x.t").as("v"))
-      val lbl = nodes.join(mut.groupBy(col("u")).agg(min(col("v")).as("mv")),
-          Seq("u"), "left")
-        .select(col("u"),
-          least(col("u"), coalesce(col("mv"), col("u"))).as("scc_id"))
-        .duckCkpt()
+      val lbl = Extras138.sccLabels(nodes, r).duckCkpt()
       // giant SCC: max member count, ties to the SMALLER scc_id
       val giant = lbl.groupBy(col("scc_id")).agg(count(lit(1)).as("c"))
         .agg(max(struct(col("c"), (-col("scc_id")).as("nid"))).as("m"))
@@ -101,30 +90,8 @@ object Extras154 {
     // the fixture's ecc is ~2; the cap only fences a pathological
     // regeneration).
     "q_graph_diameter" -> ((s, d) => {
-      val und = Extras11.undirectedEdges(s, d)
-      val e = und.select(col("a").as("src"), col("b").as("dst"))
-        .unionByName(und.select(col("b").as("src"), col("a").as("dst")))
-        .duckCkpt()
-      def bfs(seed: DataFrame): DataFrame = {
-        // Lazy loop checkpoints (round 16): each round's count()
-        // materializes its own blocks.
-        var res = seed.select(col("u"), lit(0).as("h")).duckCkptLazy()
-        var frontier = res
-        var rounds = 0
-        var more = frontier.count() > 0
-        while (more && rounds < 40) {
-          rounds += 1
-          val next = e.join(frontier.select(col("u").as("src")), "src")
-            .select(col("dst").as("u")).distinct()
-            .join(res, Seq("u"), "left_anti")
-            .select(col("u"), lit(rounds).as("h"))
-            .duckCkptLazy()
-          res = res.unionByName(next)
-          frontier = next
-          more = next.count() > 0
-        }
-        res.duckCkptLazy()
-      }
+      val e = Extras11.symmetricEdges(s, d).duckCkpt()
+      def bfs(seed: DataFrame): DataFrame = Extras11.bfs(e, seed, 40)
       val u0 = e.agg(min(col("src")).as("u"))
       val m1 = bfs(u0)
       val s1 = m1.agg(max(struct(col("h"), (-col("u")).as("nu"))).as("m"))

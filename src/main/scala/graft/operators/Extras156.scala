@@ -38,8 +38,7 @@ object Extras156 {
     // counted arithmetically (C(n,3) − classified).
     "q_graph_triad_census" -> ((s, d) => {
       val e = Extras138.directedEdges(s, d).duckCkpt()
-      val nodes = e.select(col("src").as("u"))
-        .unionByName(e.select(col("dst").as("u"))).distinct()
+      val nodes = Extras138.nodesOf(e)
       // dyad flags on unordered support pairs (u < v)
       val df = e.select(least(col("src"), col("dst")).as("u"),
           greatest(col("src"), col("dst")).as("v"),

@@ -28,18 +28,6 @@ import graft.Tables
 object Extras157 {
   import graft.Det._
 
-  private def dailyUsd(s: SparkSession, d: String): DataFrame =
-    Tables.orders(s, d)
-      .groupBy(to_date(col("o_orderdate")).as("dt"))
-      .agg(sum((dec(col("o_totalprice")) * 100).cast("long")).as("vc"))
-      .select(col("dt"), expr("vc div 100").as("v"))
-
-  private val DailySql =
-    """daily AS (SELECT CAST(o_orderdate AS DATE) AS dt,
-         CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
-              AS BIGINT)) // 100 AS BIGINT) AS v
-       FROM orders GROUP BY 1)"""
-
   /** Discount-bp spine with cumulative-from-top tp/fp and totals. */
   private def thSpine(s: SparkSession, d: String): DataFrame = {
     val per = Tables.lineitem(s, d)
@@ -64,7 +52,7 @@ object Extras157 {
     // the residual (the esd_outliers kernel): catches anomalies that
     // raw ESD misses because weekly seasonality dominates deviation.
     "q_ts_shesd" -> ((s, d) => {
-      val daily = dailyUsd(s, d)
+      val daily = Extras150.dailyUsd(s, d)
         .withColumn("dow",
           pmod(datediff(col("dt"), lit("1970-01-01")), lit(7)))
       val wd = Window.partitionBy(col("dow")).orderBy(col("v"), col("dt"))
@@ -74,26 +62,9 @@ object Extras157 {
         .withColumn("cnt", count(lit(1)).over(wc))
         .where(col("rn") === expr("(cnt + 1) div 2"))
         .select(col("dow"), col("v").as("med"))
-      var rem = daily.join(broadcast(med), "dow")
-        .select(col("dt"), col("v"), (col("v") - col("med")).as("r"))
-        .duckCkpt()
-      val picks = scala.collection.mutable.ArrayBuffer[DataFrame]()
-      for (rd <- 1 to 3) {
-        val tot = rem.agg(count(lit(1)).as("n"), sum(col("r")).as("sr"))
-        val top = rem.crossJoin(broadcast(tot))
-          .select(col("dt"), col("v"), col("r"), col("n"),
-            (col("n") * col("r") - col("sr")).as("dev_num"))
-          .withColumn("rn", row_number().over(Window.orderBy(
-            abs(col("dev_num")).desc, col("dt"))))
-          .where(col("rn") === 1)
-          .select(lit(rd.toLong).as("round"), col("dt"), col("v"),
-            col("r"), col("dev_num"), col("n"))
-          .duckCkpt()
-        picks += top
-        rem = rem.join(top.select(col("dt")), Seq("dt"), "left_anti")
-          .duckCkpt()
-      }
-      picks.reduce(_ unionByName _).orderBy(col("round"))
+      Extras150.esdPicks(daily.join(broadcast(med), "dow")
+          .select(col("dt"), col("v"), (col("v") - col("med")).as("r")), "r")
+        .orderBy(col("round"))
     }),
 
     // THRESHOLD SELECTION — Youden's J (max sensitivity+specificity−1,
@@ -215,7 +186,7 @@ object Extras157 {
               SELECT dt, v, r FROM $prev
               WHERE dt NOT IN (SELECT dt FROM p$r))"""
       }.mkString(",\n")
-      s"""WITH $DailySql,
+      s"""WITH ${Extras150.DailySql},
             dow AS (SELECT dt, v,
                       (dt - DATE '1970-01-01') % 7 AS dw
                     FROM daily),

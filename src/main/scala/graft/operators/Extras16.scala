@@ -165,9 +165,7 @@ object Extras16 {
     // neighbor join is the standard hub-capped shape; here as at any
     // scale the candidate count is Σ deg(v)², not |V|².
     "q_graph_jaccard" -> ((s, d) => {
-      val und = Extras11.undirectedEdges(s, d)
-      val e = und.select(col("a").as("src"), col("b").as("dst"))
-        .unionByName(und.select(col("b").as("src"), col("a").as("dst")))
+      val e = Extras11.symmetricEdges(s, d)
       val deg = e.groupBy(col("src").as("u")).agg(count(lit(1)).as("deg"))
       // Round 17 A/B'd and REVERTED (the two_hop §2.5 treatment —
       // explicit core-parallelism repartitions on the wedge join and

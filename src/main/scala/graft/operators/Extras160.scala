@@ -90,29 +90,21 @@ object Extras160 {
       // entry = the single nearest upper-layer node per query (the
       // paper's ep; a 4-seed efSearch warm start was A/B'd and left
       // recall unchanged at both scales — BASELINE.md round-14)
-      var state = Extras148.strideEntry(vpack, qp)
-        .withColumn("exp", lit(false))
-        .duckCkpt()
-      // best-first rounds, ONE checkpoint + ONE bounded driver read
-      // per round: the frontier is BY CONSTRUCTION <= 1 row per query
-      // (<= 4 rows — the playbook bounded-read rule), so it collects
-      // to the driver and re-enters the plan as a literal broadcast
-      // relation — this halves the per-round action count vs a
-      // checkpointed frontier (measured: ~0.9 -> ~0.45 s/round). The
-      // round cap lives in BOTH engines, and a terminated query
-      // expands nothing in both, so skipping no-op rounds cannot
-      // diverge.
+      // best-first rounds, ONE cut + ONE bounded driver read per round:
+      // the frontier is BY CONSTRUCTION <= 1 row per query (<= 4 rows —
+      // the playbook bounded-read rule), so it collects to the driver
+      // and re-enters the plan as a literal broadcast relation — this
+      // halves the per-round action count vs a checkpointed frontier
+      // (measured: ~0.9 -> ~0.45 s/round). The round cap lives in BOTH
+      // engines, and a terminated query expands nothing in both, so
+      // skipping no-op rounds cannot diverge.
       import s.implicits._
-      var t = 0
-      var active = true
-      while (t < maxRounds && active) {
+      val state = Fixpoint.bounded(Extras148.strideEntry(vpack, qp)
+          .withColumn("exp", lit(false)), maxRounds, _ => ()) { rs =>
+        val state = rs.last.df
         // ONE ranked pass yields both the ef-bound (16th-best found)
         // and the best unexpanded node (min struct over !exp rows —
-        // no second window); the gated frontier is BY CONSTRUCTION
-        // <= 1 row per query (<= 4 rows — the playbook bounded-read
-        // rule), so it collects and re-enters the plan as a literal
-        // broadcast relation: one driver read + one checkpoint per
-        // round (a checkpointed frontier measured ~2x the wall-clock)
+        // no second window)
         val baRows = state
           .withColumn("rn", row_number().over(bw))
           .groupBy(col("qid"))
@@ -122,7 +114,7 @@ object Extras160 {
           .where(col("bu").isNotNull && col("bu.dd") <= col("t16"))
           .select(col("qid"), col("bu.vec_id").as("vec_id"))
           .collect()
-        if (baRows.isEmpty) { active = false } else {
+        if (baRows.isEmpty) None else {
           val ba = baRows.toSeq
             .map(r => (r.getLong(0), r.getLong(1)))
             .toDF("qid", "vec_id")
@@ -137,16 +129,14 @@ object Extras160 {
             .join(broadcast(qp), "qid")
             .select(col("qid"), col("vec_id"), d2("qv", "vb").as("dd"),
               lit(false).as("exp"))
-          state = state
+          Some(state
             .join(broadcast(ba.withColumn("f", lit(true))),
               Seq("qid", "vec_id"), "left")
             .select(col("qid"), col("vec_id"), col("dd"),
               (col("exp") || coalesce(col("f"), lit(false))).as("exp"))
-            .unionByName(scored)
-            .duckCkpt()
+            .unionByName(scored))
         }
-        t += 1
-      }
+      }.last.df
       state.where(col("vec_id") =!= col("qid"))
         .withColumn("rank", row_number().over(
           Window.partitionBy(col("qid"))

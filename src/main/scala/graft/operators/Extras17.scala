@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{Det, Tables}
@@ -11,6 +11,22 @@ import graft.{Det, Tables}
   */
 object Extras17 {
   import Det._
+
+  /** One peel round over symmetric arcs (src, dst): keeps the arcs
+    * whose two ends both have a degree that `keep` accepts. */
+  private[graft] def peel(e: DataFrame)(keep: Column => Column)
+      : DataFrame = {
+    val kept = e.groupBy(col("src").as("u")).agg(count(lit(1)).as("c"))
+      .where(keep(col("c"))).select(col("u"))
+    e.join(kept.withColumnRenamed("u", "src"), Seq("src"), "semi")
+      .join(kept.withColumnRenamed("u", "dst"), Seq("dst"), "semi")
+      .select(col("src"), col("dst"))
+  }
+
+  /** The bounded k-core: three peel rounds at degree ≥ k (the round
+    * count the oracles unroll), the last one materialized. */
+  private[graft] def kcore(e: DataFrame, k: Long): DataFrame =
+    Fixpoint.rounds(e, 3)(peel(_)(_ >= k)).last
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -92,24 +108,13 @@ object Extras17 {
     // the community-density filter (the standard prune before expensive
     // per-node work): each round drops nodes of degree < 2 and induces
     // the subgraph on the survivors. Iterative like BFS/PageRank: degree
-    // aggregate + two semi-joins per round, edges localCheckpoint'd so
+    // aggregate + two semi-joins per round, each round a Fixpoint cut so
     // lineage stays one round deep; at scale the edge relation keeps its
     // (src) partitioning and only the shrinking keep-set moves. Three
     // unrolled rounds (not to fixpoint) so the DuckDB twin is three
     // unrolled CTEs — same contract as the BPE rounds.
     "q_graph_kcore" -> ((s, d) => {
-      val und = Extras11.undirectedEdges(s, d)
-      var e = und.select(col("a").as("src"), col("b").as("dst"))
-        .unionByName(und.select(col("b").as("src"), col("a").as("dst")))
-        .duckCkpt()
-      for (_ <- 1 to 3) {
-        val keep = e.groupBy(col("src").as("u")).agg(count(lit(1)).as("c"))
-          .where(col("c") >= 2).select(col("u"))
-        e = e.join(keep.withColumnRenamed("u", "src"), Seq("src"), "semi")
-          .join(keep.withColumnRenamed("u", "dst"), Seq("dst"), "semi")
-          .select(col("src"), col("dst"))
-          .duckCkpt()
-      }
+      val e = kcore(Extras11.symmetricEdges(s, d), 2L)
       e.groupBy(col("src").as("u")).agg(count(lit(1)).as("degree"))
         .orderBy("u")
     }),

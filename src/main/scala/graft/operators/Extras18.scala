@@ -55,9 +55,9 @@ object Extras18 {
     // 2·tri/(deg·(deg−1)) is one IEEE division of agreed integers.
     // Join-shaped on the shared graph; nodes with deg < 2 report cc = 0.
     "q_graph_cluster_coeff" -> ((s, d) => {
-      val und = Extras11.undirectedEdges(s, d).duckCkpt()
-      val e = und.select(col("a").as("src"), col("b").as("dst"))
-        .unionByName(und.select(col("b").as("src"), col("a").as("dst")))
+      val e = Extras11.symmetricEdges(s, d).duckCkpt()
+      val und = e.where(col("src") < col("dst"))
+        .select(col("src").as("a"), col("dst").as("b"))
       val deg = e.groupBy(col("src").as("u")).agg(count(lit(1)).as("deg"))
       val tri = und.as("e1")
         .join(und.as("e2"), col("e1.b") === col("e2.a"))

@@ -23,9 +23,7 @@ object Extras31 {
     // the async coin-flip LPA. Each round is one self-join + min-agg
     // on the symmetrized edge list; labels are exact node ids.
     "q_graph_label_prop" -> ((s, d) => {
-      val und = Extras11.undirectedEdges(s, d)
-      val e = und.select(col("a").as("src"), col("b").as("dst"))
-        .unionAll(und.select(col("b").as("src"), col("a").as("dst")))
+      val e = Extras11.symmetricEdges(s, d)
       val nodes = e.select(col("src").as("u")).distinct()
       def round(labels: DataFrame): DataFrame =
         e.join(labels.withColumnRenamed("u", "dst2")

@@ -152,9 +152,7 @@ object Extras35 {
     // on the denser user%3 slice — the %7 graph is so sparse at smoke
     // scale that every 2-hop neighbor is already a direct one.
     "q_graph_two_hop" -> ((s, d) => {
-      val und = Extras11.undirectedEdges(s, d, mod = 3L)
-      val e = und.select(col("a").as("src"), col("b").as("dst"))
-        .unionByName(und.select(col("b").as("src"), col("a").as("dst")))
+      val e = Extras11.symmetricEdges(s, d, mod = 3L)
       // distinct + LEFT ANTI instead of EXCEPT: e is distinct by
       // construction, so EXCEPT's right-side re-distinct was a wasted
       // shuffle (round-10 A/B probe: 10.8→4.8 s at sf0.1; the

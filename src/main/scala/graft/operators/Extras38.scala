@@ -118,9 +118,7 @@ object Extras38 {
     // only through shared neighbors (Σ deg² join, never |V|²), the
     // degree relation is vocabulary-sized and broadcasts.
     "q_graph_resource_alloc" -> ((s, d) => {
-      val und = Extras11.undirectedEdges(s, d)
-      val e = und.select(col("a").as("src"), col("b").as("dst"))
-        .unionByName(und.select(col("b").as("src"), col("a").as("dst")))
+      val e = Extras11.symmetricEdges(s, d)
       val deg = e.groupBy(col("dst").as("z")).agg(count(lit(1)).as("degz"))
       e.as("p").join(e.as("q"),
           col("p.dst") === col("q.dst") && col("p.src") < col("q.src"))

@@ -223,9 +223,7 @@ object Extras42 {
     // Candidates arrive only through shared neighbors (Σ deg² join,
     // never |V|²).
     "q_graph_adamic_adar" -> ((s, d) => {
-      val und = Extras11.undirectedEdges(s, d)
-      val e = und.select(col("a").as("src"), col("b").as("dst"))
-        .unionByName(und.select(col("b").as("src"), col("a").as("dst")))
+      val e = Extras11.symmetricEdges(s, d)
       val deg = e.groupBy(col("dst").as("z")).agg(count(lit(1)).as("degz"))
         .withColumn("w_pico", round(lit(1e12) / log(col("degz"))).cast("long"))
       // Round 17 (the two_hop lesson, §2.5): Σdeg²-output expansion on a

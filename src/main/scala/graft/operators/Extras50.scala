@@ -24,9 +24,7 @@ object Extras50 {
     * n_k counts the nodes first reached at exactly k hops. Harmonic and
     * truncated closeness centrality are two formulas over these counts. */
   private[operators] def hopCounts3(s: SparkSession, d: String): DataFrame = {
-    val und = Extras11.undirectedEdges(s, d)
-    val e = und.select(col("a").as("src"), col("b").as("dst"))
-      .unionByName(und.select(col("b").as("src"), col("a").as("dst")))
+    val e = Extras11.symmetricEdges(s, d)
     val seeds = e.select(col("src").as("seed")).distinct()
       .where(pmod(col("seed"), lit(35L)) === 0)
     val d1 = seeds.join(e, col("seed") === col("src"))

@@ -75,12 +75,8 @@ object Extras66 {
             expr("""CAST(CAST(raw AS DECIMAL(38,0)) * 1000000 div mx
                     AS BIGINT)""").as("sc"))
       }
-      var r = step(ce.select(col("src").as("u")).distinct()
-        .select(col("u"), lit(1000000L).as("sc")))
-      // lazy (round 16): each round's mx-broadcast job materializes
-      // the previous round's blocks; the eager job was redundant.
-      for (_ <- 2 to EigenIters) r = step(r.duckCkptLazy())
-      r
+      Fixpoint.rounds(step(ce.select(col("src").as("u")).distinct()
+        .select(col("u"), lit(1000000L).as("sc"))), EigenIters - 1)(step).last
     }.orderBy("u")),
 
     // EMBEDDING PC1 — dominant eigenvector of the 16×16 covariance of

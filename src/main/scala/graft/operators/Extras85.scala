@@ -122,18 +122,14 @@ object Extras85 {
     // recomputed on the survivors. Fixed round count keeps both
     // engines on the same plan (no convergence read); the spec
     // verifies the peel has actually reached its fixed point on the
-    // testdata. Each survivor set is localCheckpoint'd so lineage
+    // testdata. Each survivor set is a Fixpoint round, so lineage
     // stays one round deep.
     "q_graph_ktruss" -> ((s, d) => {
-      var edges = Extras11.undirectedEdges(s, d).duckCkpt()
-      var rounds = Seq(edges.agg(count(lit(1)).as("n_edges"))
-        .select(lit(0L).as("peel_round"), col("n_edges")))
-      for (r <- 1 to 3) {
-        edges = peelRound(edges).duckCkpt()
-        rounds = rounds :+ edges.agg(count(lit(1)).as("n_edges"))
-          .select(lit(r.toLong).as("peel_round"), col("n_edges"))
-      }
-      rounds.reduce(_ unionByName _).orderBy("peel_round")
+      Fixpoint.rounds(Extras11.undirectedEdges(s, d), 3)(peelRound)
+        .zipWithIndex.map { case (edges, r) =>
+          edges.agg(count(lit(1)).as("n_edges"))
+            .select(lit(r.toLong).as("peel_round"), col("n_edges"))
+        }.reduce(_ unionByName _).orderBy("peel_round")
     }),
 
     // PER-SOURCE ZIPF SLOPE — the log-log OLS over each source's top

@@ -114,9 +114,7 @@ object Extras89 {
     // diagonal pair = twice, so R = Σ/2 — all integer combinatorics.
     // Same join family and bounds as q_graph_triangles.
     "q_graph_4cycles" -> ((s, d) => {
-      val und = Extras11.undirectedEdges(s, d)
-      val e = und.select(col("a").as("src"), col("b").as("dst"))
-        .unionByName(und.select(col("b").as("src"), col("a").as("dst")))
+      val e = Extras11.symmetricEdges(s, d)
       val common = e.as("e1")
         .join(e.as("e2"),
           col("e1.src") === col("e2.src") && col("e1.dst") < col("e2.dst"))

@@ -113,8 +113,7 @@ object Extras95 {
     // comparisons — no float log).
     "q_graph_cc_by_degree" -> ((s, d) => {
       val und = Extras11.undirectedEdges(s, d)
-      val e = und.select(col("a").as("src"), col("b").as("dst"))
-        .unionByName(und.select(col("b").as("src"), col("a").as("dst")))
+      val e = Extras11.symmetricEdges(s, d)
       val deg = e.groupBy(col("src").as("v")).agg(count(lit(1)).as("d"))
       // Round 17 (the two_hop lesson, §2.5): Σdeg²-output wedge join on
       // a byte-sized edge list — one explicit core-parallelism

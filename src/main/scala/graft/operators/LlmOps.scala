@@ -306,9 +306,8 @@ object LlmOps {
     // canonicalization a real dedup needs (A~B, B~C ⇒ one cluster even
     // when A~C was never scored). The propagation kernel lives in
     // Components.minLabel (shared with the embedding-graph semantic
-    // dedup); see Components.scala's doc for the round-pinning strategy
-    // (localCheckpoint per round, or reliable checkpoint() when the
-    // session has a checkpoint dir — and why persist-chaining was a trap).
+    // dedup); its rounds are Fixpoint rounds (see Components.scala's doc
+    // for why persist-chaining was a trap).
     "q_llm_dedup_clusters" -> ((s, d) => {
       Components.minLabel(nearDupPairs(s, d, cachedTrips = true)
           .select(col("doc_a"), col("doc_b")))

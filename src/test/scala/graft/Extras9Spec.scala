@@ -86,6 +86,46 @@ class Extras9Spec extends QuerySuiteBase {
     }
   }
 
+  /** `run` with a reliable checkpoint dir set, and the files it wrote. */
+  private def reliably[T](run: => T): (T, Long) = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-reliable-chk")
+    spark.sparkContext.setCheckpointDir(dir.toString)
+    try {
+      val out = run
+      (out, java.nio.file.Files.walk(dir)
+        .filter(java.nio.file.Files.isRegularFile(_)).count())
+    } finally spark.sparkContext.setCheckpointDir(null)
+  }
+
+  test("closure kernel: reliable-checkpoint mode = local mode") {
+    import spark.implicits._
+    // a 30-node cycle (closes in ~log2(30) doubling rounds) plus a tail
+    val edges = ((1L to 30L).map(i => (i, i % 30 + 1)) ++
+      Seq((30L, 31L), (31L, 32L))).toDF("src", "dst")
+    def closure = operators.Extras138.transitiveClosure(edges)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val local = closure
+    val (reliable, wrote) = reliably(closure)
+    assert(reliable == local)
+    assert(local.size == 30 * 32 + 1)
+    assert(wrote > 0, "checkpoint dir empty — reliable mode never engaged")
+  }
+
+  test("fixed-round peel: reliable-checkpoint mode = local mode") {
+    import spark.implicits._
+    // a 5-clique with a pendant path: three ≥2 peels drop three path nodes
+    val und = (for (a <- 1L to 5L; b <- a + 1 to 5L) yield (a, b)) ++
+      Seq((5L, 6L), (6L, 7L), (7L, 8L), (8L, 9L))
+    val arcs = (und ++ und.map(_.swap)).toDF("src", "dst")
+    def peeled = operators.Extras17.kcore(arcs, 2L)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val local = peeled
+    val (reliable, wrote) = reliably(peeled)
+    assert(reliable == local)
+    assert(local.size == 2 * (10 + 1))
+    assert(wrote > 0, "checkpoint dir empty — reliable mode never engaged")
+  }
+
   test("quantile sketch: exact quantile always inside the bucket bound") {
     q("q_agg_quantile_sketch").collect().foreach { r =>
       val (exact, lo, hi) = (r.getLong(2), r.getLong(3), r.getLong(4))
