@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -22,6 +22,33 @@ case class CdcLatest(user_id: Long, us: Long, event_id: Long,
   */
 object Extras14 {
   import Det._
+
+  /** The CDC fold of q_stream_live_cdc: per user the latest change record
+    * by the (µs, event_id) total order, held in flatMapGroupsWithState and
+    * re-emitted (update mode) on every micro-batch that changes it.
+    * "Latest" is a max over a total order, so each input partition first
+    * keeps only its latest record per user and only those cross the state
+    * shuffle. */
+  def latestPerUser(events: DataFrame): Dataset[CdcLatest] = {
+    import events.sparkSession.implicits._
+    def later(a: CdcLatest, b: CdcLatest): CdcLatest =
+      if (a.us > b.us || (a.us == b.us && a.event_id >= b.event_id)) a
+      else b
+    StreamOps.combinePartials(StreamOps.narrow[CdcEvent](events))(
+        _.user_id,
+        e => CdcLatest(e.user_id,
+          e.ts.getTime * 1000L + (e.ts.getNanos / 1000L) % 1000L,
+          e.event_id, e.event_type, StreamOps.cents(e.value)),
+        later)
+      .groupByKey(_.user_id)
+      .flatMapGroupsWithState[CdcLatest, CdcLatest](
+        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
+        (_: Long, parts: Iterator[CdcLatest], state: GroupState[CdcLatest]) =>
+          val next = (state.getOption.iterator ++ parts).reduce(later)
+          state.update(next)
+          Iterator(next)
+      }
+  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -67,31 +94,10 @@ object Extras14 {
     // makes the result invariant to the batch split — the same
     // discipline as q_stream_live_stateful. The tombstone filter runs
     // at the END so a delete arriving in any batch wins iff it is the
-    // key's last record, exactly the batch oracle's semantics. "Latest"
-    // is a max over a total order, so each input partition first keeps
-    // only its latest record per user and only those cross the state
-    // shuffle.
-    "q_stream_live_cdc" -> ((s, d) => {
-      import s.implicits._
-      def later(a: CdcLatest, b: CdcLatest): CdcLatest =
-        if (a.us > b.us || (a.us == b.us && a.event_id >= b.event_id)) a
-        else b
-      val latest = StreamOps.combinePartials(
-          StreamOps.narrow[CdcEvent](StreamOps.eventsFileStream(s, d)))(
-          _.user_id,
-          e => CdcLatest(e.user_id,
-            e.ts.getTime * 1000L + (e.ts.getNanos / 1000L) % 1000L,
-            e.event_id, e.event_type, StreamOps.cents(e.value)),
-          later)
-        .groupByKey(_.user_id)
-        .flatMapGroupsWithState[CdcLatest, CdcLatest](
-          OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
-          (_: Long, parts: Iterator[CdcLatest], state: GroupState[CdcLatest]) =>
-            val next = (state.getOption.iterator ++ parts).reduce(later)
-            state.update(next)
-            Iterator(next)
-        }
-      StreamOps.runToMemoryUpdate(latest.toDF(), "live_cdc")
+    // key's last record, exactly the batch oracle's semantics.
+    "q_stream_live_cdc" -> ((s, d) =>
+      StreamOps.runToMemoryUpdate(
+        latestPerUser(StreamOps.eventsFileStream(s, d)).toDF(), "live_cdc")
         .groupBy(col("user_id"))
         .agg(max_by(struct(col("us"), col("event_id"), col("etype"),
           col("cents")), struct(col("us"), col("event_id"))).as("r"))
@@ -99,8 +105,7 @@ object Extras14 {
           col("r.event_id").as("event_id"), col("r.etype").as("etype"),
           col("r.cents").as("cents"))
         .where(col("etype") =!= "error")
-        .orderBy("user_id")
-    })
+        .orderBy("user_id"))
   )
 
   val oracle: Map[String, String] = Map(

@@ -110,7 +110,19 @@ object StreamOps {
     * and replays the changelogs after it, so a restart still rebuilds the
     * exact state of the last committed batch (the deterministic-replay
     * argument of D-Streams) while each commit writes only what changed.
-    * The provider ignores the setting under the heap-provider override. */
+    * The provider ignores the setting under the heap-provider override.
+    *
+    * Checkpoint files (offset, commit and source logs, state schema and
+    * operator metadata, changelogs and their checksum files) go through
+    * LocalCheckpointFileManager. Without the native Hadoop library,
+    * Spark's default manager starts a `chmod` process for every file
+    * create and mkdir and `readlink`/`ls` processes for every overwriting
+    * rename, so on a local disk a micro-batch's commit cost process
+    * starts, not its bytes (state commit 289–362 → 7–49 ms and log commit
+    * 63–69 → 3–4 ms per batch on the two live keys of the `iterative`
+    * benchmark at sf0.1, 4 cores). The manager changes only
+    * `file:` paths: checkpoints on cluster storage (hdfs:, s3a:, …) keep
+    * Spark's default manager. Spark's checksum manager stays on above it. */
   def withCappedState[T](spark: SparkSession)(f: => T): T = {
     val conf = spark.conf
     val partKey = "spark.sql.shuffle.partitions"
@@ -122,7 +134,9 @@ object StreamOps {
         sys.props.getOrElse("graft.stateStoreProvider",
           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"),
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
-        "true")
+        "true",
+      LocalCheckpointFileManager.ClassKey ->
+        classOf[LocalCheckpointFileManager].getName)
     val prev = pins.map { case (k, _) => k -> conf.getOption(k) }
     pins.foreach { case (k, v) => conf.set(k, v) }
     try f finally prev.foreach {

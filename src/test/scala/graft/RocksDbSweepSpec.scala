@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.StreamOps
+import graft.streaming.{LocalCheckpointFileManager, StreamOps}
 
 /** Round-6 provider sweep: every graded live-streaming query runs under
   * the RocksDB state store provider (set centrally by
@@ -26,18 +26,25 @@ class RocksDbSweepSpec extends QuerySuiteBase {
     val key = "spark.sql.streaming.stateStore.providerClass"
     val changelog =
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+    val manager = LocalCheckpointFileManager.ClassKey
     val before = spark.conf.getOption(key)
     val changelogBefore = spark.conf.getOption(changelog)
+    val managerBefore = spark.conf.getOption(manager)
     StreamOps.withCappedState(spark) {
       assert(spark.conf.get(key).contains("RocksDBStateStoreProvider"),
         "withCappedState must pin the RocksDB provider")
       assert(spark.conf.get(changelog) == "true",
         "withCappedState must commit RocksDB state as changelogs")
       assert(spark.conf.get("spark.sql.shuffle.partitions").toInt <= 8)
+      assert(spark.conf.get(manager) ==
+        classOf[LocalCheckpointFileManager].getName,
+        "withCappedState must write checkpoint files without process spawns")
     }
     assert(spark.conf.getOption(key) == before, "provider conf leaked")
     assert(spark.conf.getOption(changelog) == changelogBefore,
       "changelog conf leaked")
+    assert(spark.conf.getOption(manager) == managerBefore,
+      "checkpoint manager conf leaked")
   }
 
   for (k <- sweepKeys)
